@@ -1,26 +1,53 @@
 """Similarity search over embedding columns (SURVEY.md §2.10).
 
-- brute-force cosine top-k (the exactness baseline)
-- LSH-bucketed ANN top-k (random-hyperplane signs; the scale path — the
-  candidate scan shrinks from N to N/2^bits per bucket)
-- embedding-cosine near-duplicate pairs (brute force + LSH-bucketed form)
+- brute-force cosine top-k (the exactness baseline) and embedding-cosine
+  near-duplicate pairs (brute force + LSH-bucketed forms);
+- LSH-bucketed ANN top-k (random-hyperplane signs) and IVF ANN top-k
+  (seed or exact-decimal Lloyd-refined cells, single or multi-probe);
+- product quantization (PQ) through ONE spec-driven path: a frozen
+  :class:`PQSpec` (m subspaces x d dims, bits per code, assignment
+  distance form, optional OPQ permutation) selects the layout, and the
+  module constants name the four in use —
 
-All vector math is JVM-side via array higher-order functions
-(``zip_with`` products + ``aggregate`` summation over double arrays) — no
-Python UDFs. Cosines are rounded at 6 decimals via DECIMAL (see
-functions.metrics) before ranking/thresholding so results are
-engine-stable; ties break on vec_id.
+  =====  ======  ====  =====  ======================================
+  spec   m x d   bits  form   quantizer
+  =====  ======  ====  =====  ======================================
+  PQ3    8 x 8   3     3term  8-entry seed books, one 24-bit code word
+  PQ8    8 x 8   8     2term  256-entry books, one 64-bit word
+  PQ16   16 x 4  8     2term  256-entry books, two 64-bit words
+  OPQ16  16 x 4  8     2term  PQ16 over balanced-energy permuted dims
+  =====  ======  ====  =====  ======================================
+
+  :func:`embedding_pq_codes`, :func:`ann_pq_adc_topk` (asymmetric
+  distance scan, optional exact-L2 shortlist rerank) and
+  :func:`ann_ivfpq_topk` (IVF cells x ADC) take a spec, each with its
+  ``*_sql`` DuckDB twin; the IVF-PQ16 index lifecycle and residual
+  IVF-PQ16 build on the same helpers;
+- SemDeDup cell-bucketed dedup and IVF quality/recall censuses.
+
+Vector math has two executions with bit-identical results where a
+ranking depends on it. Plan-constant expressions (query cosines, LUT
+lookups, rerank distances) are array higher-order functions — strictly
+sequential ``zip_with`` products + ``aggregate`` sums, the op order of
+DuckDB's list_dot_product. The per-row codebook argmin and cell argmax
+run as Arrow-batched numpy pandas UDFs (:func:`_js_np_udf`,
+:func:`_cell_np_udf`) that replay the same op order; the interpreted
+forms they replaced stay as their tested reference. Pairwise cosine uses
+an einsum pandas UDF (:func:`_dot_udf`) whose accumulation order
+differs by <= 1e-12. Cosines and distances are rounded at 6 decimals via
+DECIMAL before ranking/thresholding so results are engine-stable; ties
+break on vec_id.
 
 At 100 TB: brute-force top-k against ONE query is a single scan (fine);
 pairwise brute force is quadratic and exists only as the correctness
-baseline — the LSH-bucketed variants are the production path (equi-join on
-bucket id). An IVF variant would replace the hyperplane bucket with a
-k-means cell id; the join shape is identical.
+baseline — the LSH- and cell-bucketed variants are the production path
+(equi-join on bucket/cell id), and PQ scans packed codes instead of raw
+vectors.
 """
 
 from __future__ import annotations
 
-import os
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -41,17 +68,14 @@ from pyspark.sql import functions as F
 # PQ/IVF family trains ONCE per (corpus, params) instead of once per
 # query invocation, which is also exactly how a real index lifecycle
 # works (faiss train -> add -> search; see build_ivfpq16_index).
-# SPARK_GRAFT_TRAIN_CACHE=0 disables (every call retrains).
 # ---------------------------------------------------------------------------
 
 _TRAINED_CACHE: dict[tuple, object] = {}
 
 
 def _corpus_key(vecs: DataFrame) -> int | None:
-    """Canonical identity of the input relation, or None when memoing
-    is disabled/unavailable (callers then retrain unconditionally)."""
-    if os.environ.get("SPARK_GRAFT_TRAIN_CACHE", "1") != "1":
-        return None
+    """Canonical identity of the input relation, or None when it is
+    unavailable (callers then retrain unconditionally)."""
     try:
         return vecs._jdf.queryExecution().analyzed().semanticHash()
     except Exception:  # pragma: no cover - py4j surface change
@@ -142,6 +166,16 @@ _COS_SQL = (
 )
 _ROUND6_SQL = "CAST(round(CAST({x} AS DECIMAL(20,9)), 6) AS DOUBLE)"
 _VEC_SQL = "list_transform({e}, x -> CAST(x AS DOUBLE))"
+
+
+def _scan_cte(name: str = "e") -> str:
+    """The (vec_id, label, v DOUBLE[]) embeddings relation every vector
+    oracle starts from."""
+    return (
+        f"{name} AS (\n"
+        f"  SELECT vec_id, label, {_VEC_SQL.format(e='embedding')} AS v"
+        " FROM embeddings\n)"
+    )
 
 
 def _vectors(emb: DataFrame) -> DataFrame:
@@ -1186,9 +1220,7 @@ def _lloyd_cells_ctes(iters: int) -> list[str]:
         )
 
     ctes = [
-        "e AS (\n"
-        f"  SELECT vec_id, label, {_VEC_SQL.format(e='embedding')} AS v"
-        " FROM embeddings\n)",
+        _scan_cte(),
         "cents0 AS (\n"
         f"  SELECT vec_id AS cid, v AS cv0 FROM e WHERE vec_id IN"
         f" ({cid_list})\n)",
@@ -1305,647 +1337,85 @@ LIMIT {k}
 
 # ---------------------------------------------------------------------------
 # Product quantization (PQ): the ANN memory-compression path. A 64-dim
-# double vector (512 bytes) becomes one packed BIGINT of 8x 3-bit codes —
-# ~64x smaller — and queries scan CODES with a per-query distance lookup
-# table (asymmetric distance computation, ADC) instead of raw vectors.
-# At 100 TB of embeddings this is the difference between scanning vectors
-# and scanning a codes column that fits in a fraction of the page cache.
-# Codebooks are deterministic (the CENTROID_IDS seed vectors' subspace
-# slices), and every distance is the dot-product expansion
-# |a-b|^2 = <a,a> - 2<a,b> + <b,b> — the exact form whose Spark fold /
-# DuckDB list_dot_product agreement the IVF cell assignment already
-# proves, so codes and ADC rankings are engine-stable.
-# ---------------------------------------------------------------------------
-
-#: PQ layout: PQ_M subspaces of PQ_DIMS dims each (PQ_M x PQ_DIMS = 64);
-#: one code indexes the 8 seed sub-centroids -> 3 bits per subspace
-PQ_M = 8
-PQ_DIMS = 8
-
-
-def _pq_codebooks(vecs: DataFrame) -> dict[int, dict[int, list[float]]]:
-    """codebooks[s][cid] = the cid seed vector's dims [s*PQ_DIMS,
-    (s+1)*PQ_DIMS) — bounded collect of 8 rows, a plan constant."""
-    seeds = _seed_centroids(vecs)
-    return {
-        s: {
-            cid: [float(x) for x in v[s * PQ_DIMS : (s + 1) * PQ_DIMS]]
-            for cid, v in seeds.items()
-        }
-        for s in range(PQ_M)
-    }
-
-
-def _sub_dists(vs: Column, cent_mat: Column) -> Column:
-    """Per-candidate L2^2 of subvector ``vs`` against every row of the
-    inlined sub-codebook matrix, via the dot-product expansion. The
-    lambda must take exactly ONE parameter — F.transform binds a
-    2-parameter callable as (element, index); ``vs`` is captured by
-    closure (safe: transform builds the expression eagerly)."""
-    return F.transform(
-        cent_mat,
-        lambda cs: dot(vs, vs) - 2 * dot(vs, cs) + dot(cs, cs),
-    )
-
-
-def _sub_code_idx(s: int, books: dict) -> Column:
-    """0-based sub-centroid index (argmin L2^2, ties -> lowest codebook
-    position) of subspace ``s`` — the shared assignment expression of
-    code packing AND codebook training."""
-    cids = sorted(books[s])
-    vs = F.slice(F.col("v"), s * PQ_DIMS + 1, PQ_DIMS)
-    cent_mat = F.array(*[_dbl_arr_lit(books[s][cid]) for cid in cids])
-    dists = _sub_dists(vs, cent_mat)
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
-def _pq_lloyd_codebooks(
-    vecs: DataFrame, iters: int = 1
-) -> dict[int, dict[int, list[float]]]:
-    """Memoized front of :func:`_pq_lloyd_codebooks_impl` (same
-    contract as the other trained-state memos)."""
-    return _memo_trained(
-        "pq_lloyd_codebooks",
-        vecs,
-        (iters,),
-        lambda: _pq_lloyd_codebooks_impl(vecs, iters),
-    )
-
-
-def _pq_lloyd_codebooks_impl(
-    vecs: DataFrame, iters: int = 1
-) -> dict[int, dict[int, list[float]]]:
-    """``iters`` exact-decimal Lloyd iterations over the PQ
-    sub-codebooks: assign every vector's subvector to its nearest
-    sub-centroid, recompute each (subspace, code) centroid as the exact
-    nano-unit integer mean of its members — the SAME engine-stable
-    k-means update as ``_lloyd_refined_cells``, run in the 8 subspaces
-    independently (FAISS-style PQ training, determinized).
-
-    Per iteration: one projection pass (assignment is inlined
-    literals), one explode to (subspace, code, dim, nano-component),
-    one bounded aggregate collected as <= PQ_M x |codes| x PQ_DIMS =
-    512 rows — plan constants at any corpus size. A code that lost all
-    members keeps its previous centroid."""
-    books = _pq_codebooks(vecs)
-    nano = F.expr(
-        f"CAST(round(CAST(comp AS DECIMAL(30,15)) * {_NANO}, 0) AS BIGINT)"
-    )
-    for _ in range(iters):
-        pre = vecs.select(
-            "v", _js_np_udf(books, PQ_M, PQ_DIMS, "3term").alias("_js")
-        )
-        assigned = [
-            F.struct(
-                F.lit(s).alias("s"),
-                F.element_at(F.col("_js"), s + 1).alias("j"),
-                F.slice(F.col("v"), s * PQ_DIMS + 1, PQ_DIMS).alias("vs"),
-            )
-            for s in range(PQ_M)
-        ]
-        means = (
-            pre.select(F.explode(F.array(*assigned)).alias("a"))
-            .select(
-                F.col("a.s").alias("s"),
-                F.col("a.j").alias("j"),
-                F.posexplode(F.col("a.vs")).alias("dim", "comp"),
-            )
-            .select("s", "j", "dim", nano.alias("nv"))
-            .groupBy("s", "j", "dim")
-            .agg(F.sum("nv").alias("sm"), F.count(F.lit(1)).alias("n"))
-            .select(
-                "s", "j", "dim",
-                F.expr("sm div n").cast("bigint").alias("m"),
-            )
-            .collect()
-        )
-        got: dict[tuple[int, int], dict[int, int]] = {}
-        for r in means:
-            got.setdefault((r["s"], r["j"]), {})[r["dim"]] = r["m"]
-        books = {
-            s: {
-                cid: (
-                    [got[(s, j)][d] / _NANO for d in range(PQ_DIMS)]
-                    if (s, j) in got
-                    else list(books[s][cid])
-                )
-                for j, cid in enumerate(sorted(books[s]))
-            }
-            for s in range(PQ_M)
-        }
-    return books
-
-
-def _pq_pack_codes(vecs: DataFrame, books: dict) -> DataFrame:
-    # r10: per-subspace argmin via the vectorized kernel (guide §4.2);
-    # the bit-pack stays a native shift-sum over the returned indexes
-    pre = vecs.select(
-        "vec_id",
-        "label",
-        _js_np_udf(books, PQ_M, PQ_DIMS, "3term").alias("_js"),
-    )
-    [word] = _pack_js(F.col("_js"), PQ_M, 3)
-    return pre.select("vec_id", "label", word.alias("pq_code"))
-
-
-def _pq_cells_codes(
-    vecs: DataFrame,
-    cents: dict[int, list[float]],
-    books: dict[int, dict[int, list[float]]],
-) -> DataFrame:
-    """(vec_id, label, cell, pq_code) in ONE projection — the fused
-    replacement for ``cells.select("vec_id","cell").join(codes,
-    "vec_id")`` in :func:`ann_ivfpq_topk`. Cell and code are both pure
-    per-row functions of ``v`` (identical expressions to
-    ``_with_cells`` / ``_pq_pack_codes``), so the self-join of two
-    projections of the same relation is a second full scan plus a join
-    exchange for nothing (guide §2.4)."""
-    pre = vecs.select(
-        "vec_id",
-        "label",
-        _cell_np_udf(cents).alias("cell"),
-        _js_np_udf(books, PQ_M, PQ_DIMS, "3term").alias("_js"),
-    )
-    [word] = _pack_js(F.col("_js"), PQ_M, 3)
-    return pre.select("vec_id", "label", "cell", word.alias("pq_code"))
-
-
-def embedding_pq_codes(emb: DataFrame, train_iters: int = 0) -> DataFrame:
-    """(vec_id, label, pq_code): each vector's packed product-quantizer
-    code — per subspace, the index (0..7, by CENTROID_IDS order) of the
-    L2-nearest sub-centroid, packed little-endian at 3 bits/subspace.
-    ``train_iters > 0`` first refines the sub-codebooks with that many
-    exact-decimal Lloyd iterations (:func:`_pq_lloyd_codebooks`).
-
-    Pure PROJECTION: sub-codebooks are inlined literals, each subspace's
-    argmin is an expression fold over 8 candidate distances (ties ->
-    lowest centroid id, same contract as the IVF cell assignment), and
-    the pack is integer shifts. No shuffle at any scale — quantizing
-    100 TB is one map pass (plus ``train_iters`` bounded-aggregate
-    training passes)."""
-    vecs = _vectors(emb)
-    books = (
-        _pq_codebooks(vecs)
-        if train_iters == 0
-        else _pq_lloyd_codebooks(vecs, train_iters)
-    )
-    return _pq_pack_codes(vecs, books)
-
-
-def _pq_codes_cte(include_e: bool = True) -> str:
-    """Shared oracle CTE chain producing codes(vec_id, label, pq_code):
-    the relational twin of the projection — per (vec, subspace),
-    row_number over (L2^2 ASC, cid ASC) picks the sub-centroid, SUM of
-    shifted indexes packs the code. ``include_e=False`` drops the
-    leading ``e`` CTE so the chain composes with another chain (the
-    lloyd cells) that already defines it."""
-    cid_list = ", ".join(str(c) for c in CENTROID_IDS)
-    d = PQ_DIMS
-    # per-subspace slices as a UNION-free lateral: unnest the subspace
-    # index and slice with list indexing (DuckDB slices are 1-based
-    # inclusive)
-    e_cte = f"""
-e AS (
-  SELECT vec_id, label, {_VEC_SQL.format(e='embedding')} AS v FROM embeddings
-),"""
-    return f"""{e_cte if include_e else ""}
-subs AS (
-  SELECT vec_id, label, s,
-         v[s * {d} + 1 : s * {d} + {d}] AS vs
-  FROM e, unnest(range({PQ_M})) AS r(s)
-),
-csubs AS (
-  SELECT vec_id AS cid, s, v[s * {d} + 1 : s * {d} + {d}] AS cs
-  FROM e, unnest(range({PQ_M})) AS r(s)
-  WHERE vec_id IN ({cid_list})
-),
-scored AS (
-  SELECT subs.vec_id, subs.label, subs.s, csubs.cid,
-         row_number() OVER (
-           PARTITION BY subs.vec_id, subs.s
-           ORDER BY {_DOT_SQL.format(a='vs', b='vs')}
-                    - 2 * {_DOT_SQL.format(a='vs', b='cs')}
-                    + {_DOT_SQL.format(a='cs', b='cs')} ASC,
-                    csubs.cid ASC
-         ) AS rn
-  FROM subs JOIN csubs ON subs.s = csubs.s
-),
-codes AS (
-  SELECT vec_id,
-         ANY_VALUE(label) AS label,
-         CAST(SUM((cid - {min(CENTROID_IDS)}) << (3 * s)) AS BIGINT)
-           AS pq_code
-  FROM scored WHERE rn = 1
-  GROUP BY vec_id
-)"""
-
-
-EMBEDDING_PQ_CODES_SQL = f"""
-WITH {_pq_codes_cte().strip()}
-SELECT vec_id, label, pq_code FROM codes
-"""
-
-
-def ann_pq_adc_topk(
-    emb: DataFrame, query_id: int = 0, k: int = TOP_K, train_iters: int = 0
-) -> DataFrame:
-    """Approximate top-k by PQ asymmetric distance computation: the
-    query's RAW vector builds a 8x8 lookup table (LUT[s][j] = exact
-    L2^2 of the query's subspace s slice to sub-centroid j — 64 plan
-    constants, computed driver-side with the same sequential dot the
-    relational form evaluates), and every corpus vector's approximate
-    distance is the sum of 8 LUT lookups indexed by its code — the scan
-    touches ONLY the packed code column, never raw vectors.
-
-    Returned distance is the raw ADC value (rounded at 6 decimals on
-    both sides); ordering is (adc ASC, vec_id ASC). Recall is bounded
-    by quantization distortion — this is the memory-bound scan path;
-    compose with IVF cells for the full IVF-PQ shape. ``train_iters``
-    selects Lloyd-trained sub-codebooks (codes AND the LUT use the same
-    books — the quantizer and the query-side table must agree)."""
-    vecs = _vectors(emb)
-    books = (
-        _pq_codebooks(vecs)
-        if train_iters == 0
-        else _pq_lloyd_codebooks(vecs, train_iters)
-    )
-    qv = _query_vec(vecs, query_id)
-    lut = _pq_query_lut(qv, books, PQ_M, PQ_DIMS)
-    codes = _pq_pack_codes(vecs, books)
-    adc = _adc_expr(lut, PQ_M, bits=3)
-    return (
-        codes.where(F.col("vec_id") != query_id)
-        .select("vec_id", "label", _round6(adc).alias("adc"))
-        .orderBy(F.asc("adc"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def ann_pq_adc_topk_sql(query_id: int = 0, k: int = TOP_K) -> str:
-    """Oracle twin: the same codes CTE, the LUT computed relationally
-    (query slices x sub-centroids), ADC as a SUM over the 8 unpacked
-    code indexes joined against the LUT."""
-    d = PQ_DIMS
-    return f"""
-WITH {_pq_codes_cte().strip()},
-lut AS (
-  SELECT csubs.s,
-         csubs.cid - {min(CENTROID_IDS)} AS j,
-         {_DOT_SQL.format(a='qs.vs', b='qs.vs')}
-           - 2 * {_DOT_SQL.format(a='qs.vs', b='csubs.cs')}
-           + {_DOT_SQL.format(a='csubs.cs', b='csubs.cs')} AS dist
-  FROM csubs
-  JOIN (SELECT s, vs FROM subs WHERE vec_id = {query_id}) qs
-    ON qs.s = csubs.s
-),
-unpacked AS (
-  SELECT codes.vec_id, codes.label, r.s,
-         (codes.pq_code >> (3 * r.s)) & 7 AS j
-  FROM codes, unnest(range({PQ_M})) AS r(s)
-  WHERE codes.vec_id != {query_id}
-),
-adcs AS (
-  SELECT vec_id, ANY_VALUE(label) AS label, SUM(lut.dist) AS adc
-  FROM unpacked JOIN lut ON unpacked.s = lut.s AND unpacked.j = lut.j
-  GROUP BY vec_id
-)
-SELECT vec_id, label, {_ROUND6_SQL.format(x='adc')} AS adc
-FROM adcs
-ORDER BY adc ASC, vec_id ASC
-LIMIT {k}
-"""
-
-
-def ann_ivfpq_topk(
-    emb: DataFrame,
-    query_id: int = 0,
-    k: int = TOP_K,
-    iters: int = 1,
-    nprobe: int = IVF_NPROBE,
-) -> DataFrame:
-    """Full IVF-PQ: probe the query's ``nprobe`` nearest Lloyd-refined
-    cells, rank candidates by PQ asymmetric distance — the standard
-    billion-scale ANN architecture (FAISS IVFADC shape) with both
-    state components deterministic and engine-stable.
-
-    At 100 TB: the scan is doubly reduced — the cell filter prunes to
-    ~nprobe/|cells| of the corpus, and what remains is scanned as
-    packed CODES (one bigint/vector) against a 64-entry LUT of plan
-    constants. Raw vectors are touched only to assign cells/codes (one
-    projection pass each at ingest) and for the single query row."""
-    vecs = _vectors(emb)
-    _, cents = _lloyd_refined_cells(vecs, iters=iters)
-    qv = _query_vec(vecs, query_id)
-    probe_cells = _probe_cells(qv, cents, nprobe)
-    books = _pq_codebooks(vecs)
-    lut = _pq_query_lut(qv, books, PQ_M, PQ_DIMS)
-    adc = _adc_expr(lut, PQ_M, bits=3)
-    # r10: cell + code fused into one projection (_pq_cells_codes) —
-    # the former cells x codes vec_id self-join re-scanned the corpus
-    # and shuffled for columns that are row-local functions of v
-    return (
-        _pq_cells_codes(vecs, cents, books)
-        .where(
-            (F.col("vec_id") != query_id)
-            & (F.col("cell").isin(*probe_cells))
-        )
-        .select("vec_id", "label", _round6(adc).alias("adc"))
-        .orderBy(F.asc("adc"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def ann_ivfpq_topk_sql(
-    query_id: int = 0,
-    k: int = TOP_K,
-    iters: int = 1,
-    nprobe: int = IVF_NPROBE,
-) -> str:
-    """Oracle twin: the lloyd cells chain + the PQ codes chain composed
-    (one shared ``e``), probe cells from the final assignment ranking,
-    LUT relational, ADC summed over unpacked code indexes."""
-    ctes = _lloyd_cells_ctes(iters)
-    ctes.append(
-        "qcells AS (SELECT cid AS cell FROM scored_fin WHERE"
-        f" vec_id = {query_id} AND rn <= {nprobe})"
-    )
-    body = ",\n".join(ctes) + ",\n" + _pq_codes_cte(include_e=False).strip()
-    return f"""
-WITH {body},
-lut AS (
-  SELECT csubs.s,
-         csubs.cid - {min(CENTROID_IDS)} AS j,
-         {_DOT_SQL.format(a='qs.vs', b='qs.vs')}
-           - 2 * {_DOT_SQL.format(a='qs.vs', b='csubs.cs')}
-           + {_DOT_SQL.format(a='csubs.cs', b='csubs.cs')} AS dist
-  FROM csubs
-  JOIN (SELECT s, vs FROM subs WHERE vec_id = {query_id}) qs
-    ON qs.s = csubs.s
-),
-cands AS (
-  SELECT cf.vec_id
-  FROM cells_fin cf JOIN qcells USING (cell)
-  WHERE cf.vec_id != {query_id}
-),
-unpacked AS (
-  SELECT codes.vec_id, codes.label, r.s,
-         (codes.pq_code >> (3 * r.s)) & 7 AS j
-  FROM codes
-  JOIN cands ON codes.vec_id = cands.vec_id,
-  unnest(range({PQ_M})) AS r(s)
-),
-adcs AS (
-  SELECT vec_id, ANY_VALUE(label) AS label, SUM(lut.dist) AS adc
-  FROM unpacked JOIN lut ON unpacked.s = lut.s AND unpacked.j = lut.j
-  GROUP BY vec_id
-)
-SELECT vec_id, label, {_ROUND6_SQL.format(x='adc')} AS adc
-FROM adcs
-ORDER BY adc ASC, vec_id ASC
-LIMIT {k}
-"""
-
-
-def _pq_trained_ctes(iters: int) -> tuple[list[str], str]:
-    """CTE chain for Lloyd-TRAINED PQ: returns (ctes, final_csubs_name).
-    Each iteration is (assign subvectors to current sub-codebooks ->
-    nano-unit exact means per (subspace, code, dim) -> next codebooks),
-    the relational mirror of :func:`_pq_lloyd_codebooks`; the chain ends
-    with ``codes`` built from the final codebooks."""
-    cid_list = ", ".join(str(c) for c in CENTROID_IDS)
-    d = PQ_DIMS
-    ctes = [
-        "e AS (\n"
-        f"  SELECT vec_id, label, {_VEC_SQL.format(e='embedding')} AS v"
-        " FROM embeddings\n)",
-        "subs AS (\n"
-        "  SELECT vec_id, label, s,\n"
-        f"         v[s * {d} + 1 : s * {d} + {d}] AS vs\n"
-        f"  FROM e, unnest(range({PQ_M})) AS r(s)\n)",
-        "csubs0 AS (\n"
-        f"  SELECT s, vec_id AS cid, vec_id - {min(CENTROID_IDS)} AS j,\n"
-        f"         v[s * {d} + 1 : s * {d} + {d}] AS cs\n"
-        f"  FROM e, unnest(range({PQ_M})) AS r(s)\n"
-        f"  WHERE vec_id IN ({cid_list})\n)",
-    ]
-
-    def dist(a: str, b: str) -> str:
-        return (
-            f"{_DOT_SQL.format(a=a, b=a)} - 2 * {_DOT_SQL.format(a=a, b=b)}"
-            f" + {_DOT_SQL.format(a=b, b=b)}"
-        )
-
-    for i in range(iters):
-        ctes.append(
-            f"assign{i} AS (\n"
-            "  SELECT subs.vec_id, subs.s, c.j, subs.vs,\n"
-            "         row_number() OVER (\n"
-            "           PARTITION BY subs.vec_id, subs.s\n"
-            f"           ORDER BY {dist('subs.vs', 'c.cs')} ASC, c.j ASC\n"
-            "         ) AS rn\n"
-            f"  FROM subs JOIN csubs{i} c ON subs.s = c.s\n)"
-        )
-        ctes.append(
-            f"pm{i} AS (\n"
-            "  SELECT s, j,\n"
-            "         unnest(range(len(vs))) AS dim,\n"
-            f"         CAST(round(CAST(unnest(vs) AS DECIMAL(30,15)) *"
-            f" {_NANO}, 0)\n"
-            "              AS BIGINT) AS nv\n"
-            f"  FROM assign{i} WHERE rn = 1\n)"
-        )
-        ctes.append(
-            f"mn{i} AS (\n"
-            "  SELECT s, j, dim,\n"
-            "         CAST(CAST(SUM(CAST(nv AS HUGEINT)) AS HUGEINT)\n"
-            "              // COUNT(*) AS BIGINT) AS m\n"
-            f"  FROM pm{i} GROUP BY 1, 2, 3\n)"
-        )
-        ctes.append(
-            f"csubs{i + 1} AS (\n"
-            "  SELECT c.s, c.cid, c.j, COALESCE(mm.rv, c.cs) AS cs\n"
-            f"  FROM csubs{i} c\n"
-            "  LEFT JOIN (\n"
-            "    SELECT s, j,\n"
-            f"           array_agg(CAST(m AS DOUBLE) / {_NANO} ORDER BY"
-            " dim) AS rv\n"
-            f"    FROM mn{i} GROUP BY 1, 2\n"
-            "  ) mm ON mm.s = c.s AND mm.j = c.j\n)"
-        )
-    fin = f"csubs{iters}"
-    ctes.append(
-        "codes AS (\n"
-        "  SELECT a.vec_id, ANY_VALUE(subs.label) AS label,\n"
-        "         CAST(SUM(a.j << (3 * a.s)) AS BIGINT) AS pq_code\n"
-        "  FROM (\n"
-        "    SELECT subs.vec_id, subs.s, c.j,\n"
-        "           row_number() OVER (\n"
-        "             PARTITION BY subs.vec_id, subs.s\n"
-        f"             ORDER BY {dist('subs.vs', 'c.cs')} ASC, c.j ASC\n"
-        "           ) AS rn\n"
-        f"    FROM subs JOIN {fin} c ON subs.s = c.s\n"
-        "  ) a\n"
-        "  JOIN subs ON subs.vec_id = a.vec_id AND subs.s = a.s\n"
-        "  WHERE a.rn = 1\n"
-        "  GROUP BY a.vec_id\n)"
-    )
-    return ctes, fin
-
-
-def embedding_pq_codes_lloyd_sql(train_iters: int = 1) -> str:
-    ctes, _ = _pq_trained_ctes(train_iters)
-    body = ",\n".join(ctes)
-    return f"""
-WITH {body}
-SELECT vec_id, label, pq_code FROM codes
-"""
-
-
-def ann_pq_adc_topk_lloyd_sql(
-    query_id: int = 0, k: int = TOP_K, train_iters: int = 1
-) -> str:
-    """Oracle twin of the trained-codebook ADC scan: LUT from the FINAL
-    codebooks relation, codes from the same — quantizer and query-side
-    table agree by construction."""
-    ctes, fin = _pq_trained_ctes(train_iters)
-    body = ",\n".join(ctes)
-    return f"""
-WITH {body},
-lut AS (
-  SELECT c.s, c.j,
-         {_DOT_SQL.format(a='qs.vs', b='qs.vs')}
-           - 2 * {_DOT_SQL.format(a='qs.vs', b='c.cs')}
-           + {_DOT_SQL.format(a='c.cs', b='c.cs')} AS dist
-  FROM {fin} c
-  JOIN (SELECT s, vs FROM subs WHERE vec_id = {query_id}) qs
-    ON qs.s = c.s
-),
-unpacked AS (
-  SELECT codes.vec_id, codes.label, r.s,
-         (codes.pq_code >> (3 * r.s)) & 7 AS j
-  FROM codes, unnest(range({PQ_M})) AS r(s)
-  WHERE codes.vec_id != {query_id}
-),
-adcs AS (
-  SELECT vec_id, ANY_VALUE(label) AS label, SUM(lut.dist) AS adc
-  FROM unpacked JOIN lut ON unpacked.s = lut.s AND unpacked.j = lut.j
-  GROUP BY vec_id
-)
-SELECT vec_id, label, {_ROUND6_SQL.format(x='adc')} AS adc
-FROM adcs
-ORDER BY adc ASC, vec_id ASC
-LIMIT {k}
-"""
-
-
-# ---------------------------------------------------------------------------
-# PQ8: product quantization with the FAISS-STANDARD 256-entry sub-codebooks
-# (8 bits/subspace -> 8-byte codes at 64x compression). The 3-bit family
-# above is the architecture demo; its measured recall@10 (0.07-0.13,
-# SCALE.md) is what 8-entry codebooks buy. PQ8 is the production constant:
-# k*=256 per subspace, the default of faiss.IndexPQ(d, 8, 8) — same
-# machinery, two changes that matter at this size:
+# double vector (512 bytes) becomes packed BIGINT code word(s) — m
+# subspaces x ``bits`` per code — and queries scan CODES with a per-query
+# distance lookup table (asymmetric distance computation, ADC) instead of
+# raw vectors. At 100 TB of embeddings this is the difference between
+# scanning vectors and scanning a codes column that fits in a fraction of
+# the page cache.
 #
-# 1. Codebooks are FLAT string literals split+cast to array<double>
-#    (constant-folded by Catalyst; F.lit on the same 2048 values costs
-#    ~1.8 s/subspace of py4j roundtrips, and eager DataFrame analysis of
-#    a 16k-literal tree another ~2.7 s — both measured) and the
-#    assignment argmin uses the MONOTONE form |cs|^2 - 2<vs,cs> (the
-#    |vs|^2 term is constant across candidates, so dropping it preserves
-#    the argmin) with |cs|^2 pre-computed driver-side — one interpreted
-#    fold per candidate instead of three. The ORACLE ranks by the same
-#    2-term expression with the same left-to-right accumulation, so
-#    near-ties stay bit-identical across engines (the proven
-#    Spark-fold == list_dot_product agreement).
-# 2. Packing 8x 8-bit codes fills all 64 bits: subspace 7 can set the sign
-#    bit. Spark's shiftleft/sum wraps two's-complement natively (disjoint
-#    bit ranges make sum == bitwise OR); the oracle packs in HUGEINT and
-#    applies the explicit wrap  p >= 2^63 ? p - 2^64 : p  so both engines
-#    emit the same signed BIGINT.
+# One path serves every layout; a :class:`PQSpec` names it (the spec
+# table is in the module docstring).
 #
-# Training still fits the bounded-aggregation contract: one Lloyd
-# iteration collects <= PQ_M x 256 x PQ_DIMS = 16384 exact nano-unit means
-# — the codebook ITSELF (128 KB, the same artifact faiss.train ships to
-# every query node), independent of corpus size.
+# - Seed codebooks are deterministic: books[s][j] = corpus vector
+#   (j+1)'s subspace-s slice, vec_ids 1..2^bits (a bounded collect, a
+#   plan constant). A corpus missing any seed id raises instead of
+#   mis-coding.
+# - Training is exact-decimal Lloyd per subspace: nano-unit integer means
+#   (the same engine-stable update as the IVF cells), one bounded
+#   aggregate of <= m x 2^bits x d rows per iteration — the codebook
+#   itself, corpus-size independent (faiss.train's artifact).
+# - Assignment is the per-subspace argmin (ties -> lowest j) in the
+#   spec's distance form: "3term" |v|^2 - 2<v,c> + |c|^2 (the seed-family
+#   form), "2term" the monotone |c|^2 - 2<v,c> (|v|^2 is constant across
+#   candidates). The oracle ranks by the textually identical form with
+#   the same left-to-right accumulation, so near-ties break identically.
+# - Packing puts 64 // bits codes per signed bigint word. At 8 bits a
+#   word is full and subspace 7 can set the sign bit: Spark's shiftleft
+#   sum wraps two's-complement natively (disjoint bit ranges make sum ==
+#   bitwise OR); the oracle packs in HUGEINT and applies the explicit
+#   wrap  p >= 2^63 ? p - 2^64 : p  so both engines emit the same BIGINT.
+# - The query LUT is the exact 3-term L2^2 (the VALUE must be the true
+#   quantized distance), folded into plan constants; ADC is m lookups.
 # ---------------------------------------------------------------------------
 
-#: PQ8 layout: 256 sub-centroids (8 bits) per subspace; seeds are corpus
-#: vec_ids 1..256 (j = vec_id - 1), the same fixed-seed determinism as
-#: CENTROID_IDS
-PQ8_K = 256
-PQ8_BITS = 8
-PQ8_SEED_LO, PQ8_SEED_HI = 1, 256
+
+@dataclass(frozen=True)
+class PQSpec:
+    """A product-quantizer layout: ``m`` subspaces of ``d`` dims (m*d =
+    64), ``bits`` per code (2^bits-entry sub-codebooks), the assignment
+    distance ``form`` ("3term" or "2term", see the section header), and
+    ``opq`` — quantize the balanced-energy permuted vectors
+    (:func:`_opq_vectors`) instead of the raw ones."""
+
+    m: int
+    d: int
+    bits: int
+    form: str
+    opq: bool = False
+
+    @property
+    def k(self) -> int:
+        """Sub-codebook size; the seed vec_ids are 1..k."""
+        return 1 << self.bits
+
+    @property
+    def per_word(self) -> int:
+        """Codes packed per signed bigint word."""
+        return 64 // self.bits
+
+    @property
+    def word_cols(self) -> tuple[str, ...]:
+        """Packed-code column names: ``pq_code`` for a one-word code,
+        ``pq_lo``/``pq_hi`` for the two-word 16-subspace one."""
+        words = -(-self.m // self.per_word)
+        return ("pq_code",) if words == 1 else ("pq_lo", "pq_hi")
+
+
+#: the 8-entry seed family: 8 x 8-dim subspaces, 3 bits, 3-term argmin
+PQ3 = PQSpec(m=8, d=8, bits=3, form="3term")
+#: FAISS-standard 256-entry books, 8 subspaces: faiss.IndexPQ(64, 8, 8)
+PQ8 = PQSpec(m=8, d=8, bits=8, form="2term")
+#: 16 narrower subspaces at 256 entries — 16-byte codes, 32x compression
+PQ16 = PQSpec(m=16, d=4, bits=8, form="2term")
+#: PQ16 over the balanced-energy dimension permutation (OPQ-init)
+OPQ16 = PQSpec(m=16, d=4, bits=8, form="2term", opq=True)
+
+#: ADC candidates kept for the exact-L2 rerank of the two-stage variants
+RERANK_SHORTLIST = 64
 
 _TWO63 = 9223372036854775808
 _TWO64 = 18446744073709551616
-
-
-def _pq8_books(
-    vecs: DataFrame, m: int = PQ_M, d: int = PQ_DIMS
-) -> dict[int, dict[int, list[float]]]:
-    """books[s][j] = seed vector (j+1)'s dims [s*d, (s+1)*d) — bounded
-    collect of 256 rows (the untrained codebook, a plan constant like
-    the 8-row CENTROID_IDS collect). ``m`` subspaces of ``d`` dims
-    (m*d = 64): (8, 8) is the PQ8 layout, (16, 4) the PQ16 one.
-    Memoized per (corpus, m, d)."""
-
-    def build() -> dict[int, dict[int, list[float]]]:
-        rows = (
-            vecs.where(F.col("vec_id").between(PQ8_SEED_LO, PQ8_SEED_HI))
-            .select("vec_id", "v")
-            .collect()
-        )
-        full = {
-            r["vec_id"] - PQ8_SEED_LO: [float(x) for x in r["v"]]
-            for r in rows
-        }
-        want = PQ8_SEED_HI - PQ8_SEED_LO + 1
-        if len(full) != want:
-            # loud contract failure instead of a downstream KeyError:
-            # the deterministic seeding needs every id in the seed band
-            # present (real corpora are >> 256 rows; a slice that cuts
-            # into the band cannot train a full 256-entry codebook)
-            raise ValueError(
-                f"PQ seed band incomplete: corpus has {len(full)} of the"
-                f" {want} seed vectors (vec_id {PQ8_SEED_LO}..{PQ8_SEED_HI})"
-                " — PQ codebooks need the full band; train on the"
-                " unfiltered corpus or re-seed"
-            )
-        return {
-            s: {j: v[s * d : (s + 1) * d] for j, v in full.items()}
-            for s in range(m)
-        }
-
-    return _memo_trained("pq8_books", vecs, (m, d), build)
-
-
-def _pq8_sliced(
-    vecs: DataFrame,
-    m: int = PQ_M,
-    d: int = PQ_DIMS,
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
-    """Materialize the ``m`` subspace slices as real columns once — the
-    argmin lambdas then reference attributes instead of re-slicing per
-    candidate. Repartitioned to the session's parallelism AFTER the
-    slice projection: quantization is pure map work, and the toy corpus
-    files arrive as a single input split that would otherwise serialize
-    2048 folds/row on one core (at real scale the input is already
-    partitioned and the tiny exchange is noise). Order matters —
-    ``repartition().select()`` lets the optimizer evaluate the
-    downstream distance projection below the exchange, back on the one
-    input partition (measured 10x slower); slicing first pins the
-    exchange under the heavy projection."""
-    n = vecs.sparkSession.sparkContext.defaultParallelism
-    return vecs.select(
-        "vec_id",
-        "label",
-        *keep,
-        *[
-            F.slice("v", s * d + 1, d).alias(f"_vs{s}")
-            for s in range(m)
-        ],
-    ).repartition(n)
 
 
 def _dbl_arr_lit(values: list[float]) -> Column:
@@ -1976,51 +1446,118 @@ def _query_vec(vecs: DataFrame, query_id: int) -> list[float]:
     return _memo_trained("query_vec", vecs, (query_id,), build)
 
 
-def _pq_query_lut(
-    qv: list[float],
-    books: dict[int, dict[int, list[float]]],
-    m: int,
-    d: int,
-) -> list[list[float]]:
-    """Per-subspace exact-L2^2 query lookup table: LUT[s][j] = |q_s|^2
-    - 2<q_s, c_sj> + |c_sj|^2 over codebook entries in sorted-j order.
-    The single home of the 3-term expansion — the VALUE must be the
-    true quantized L2^2 (unlike the assignment argmin, where the query
-    term cancels); every PQ/OPQ/IVF-PQ variant folds this table into
-    plan constants via :func:`_adc_expr`."""
-    lut = []
-    for s in range(m):
-        qs = qv[s * d : (s + 1) * d]
-        qq = _seq_dot(qs, qs)
-        lut.append(
-            [
-                qq
-                - 2 * _seq_dot(qs, books[s][j])
-                + _seq_dot(books[s][j], books[s][j])
-                for j in sorted(books[s])
-            ]
-        )
-    return lut
+# ---------------------------------------------------------------------------
+# Reference expression forms of the code assignment. The production path
+# runs the vectorized kernels below; these interpreted array-HOF forms are
+# KEPT as the executable spec the kernels are tested against
+# (tests/test_r10_operators.py): the 3-term form per subspace
+# (_sub_dists/_sub_code_idx), and the 2-term flat-literal form over
+# materialized subspace slices (_pq8_sliced/_pq8_dists_col/
+# _pq8_with_dists/_pq8_idx).
+# ---------------------------------------------------------------------------
 
 
-def _adc_expr(lut: list[list[float]], m: int, bits: int = 8) -> Column:
-    """Asymmetric-distance column: ``m`` LUT lookups, each indexed by
-    unpacking a ``bits``-wide field from the packed code word(s) in
-    the `_pq_word_cols` layout (8 fields per bigint word; the 3-bit
-    PQ_M=8 family occupies the low 24 bits of its single word). All
-    LUT rows fold to array literals via `_dbl_arr_lit`, so the scan
-    reads only the code column(s)."""
-    cols = _pq_word_cols(m)
-    mask = (1 << bits) - 1
-    adc = F.lit(0.0)
-    for s in range(m):
-        idx = (
-            F.shiftrightunsigned(F.col(cols[s // 8]), bits * (s % 8))
-            .bitwiseAND(F.lit(mask))
-            .cast("int")
+def _sub_dists(vs: Column, cent_mat: Column) -> Column:
+    """Per-candidate L2^2 of subvector ``vs`` against every row of the
+    inlined sub-codebook matrix, via the dot-product expansion. The
+    lambda must take exactly ONE parameter — F.transform binds a
+    2-parameter callable as (element, index); ``vs`` is captured by
+    closure (safe: transform builds the expression eagerly)."""
+    return F.transform(
+        cent_mat,
+        lambda cs: dot(vs, vs) - 2 * dot(vs, cs) + dot(cs, cs),
+    )
+
+
+def _sub_code_idx(s: int, books: dict) -> Column:
+    """0-based sub-centroid index (argmin L2^2, ties -> lowest codebook
+    position) of subspace ``s`` of the 3-term PQ3 layout."""
+    cids = sorted(books[s])
+    vs = F.slice(F.col("v"), s * PQ3.d + 1, PQ3.d)
+    cent_mat = F.array(*[_dbl_arr_lit(books[s][cid]) for cid in cids])
+    dists = _sub_dists(vs, cent_mat)
+    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+
+
+def _pq8_sliced(
+    vecs: DataFrame,
+    m: int = PQ8.m,
+    d: int = PQ8.d,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """Materialize the ``m`` subspace slices as real columns once — the
+    argmin lambdas then reference attributes instead of re-slicing per
+    candidate. Repartitioned to the session's parallelism AFTER the
+    slice projection: quantization is pure map work, and the toy corpus
+    files arrive as a single input split that would otherwise serialize
+    2048 folds/row on one core (at real scale the input is already
+    partitioned and the tiny exchange is noise). Order matters —
+    ``repartition().select()`` lets the optimizer evaluate the
+    downstream distance projection below the exchange, back on the one
+    input partition (measured 10x slower); slicing first pins the
+    exchange under the heavy projection."""
+    n = vecs.sparkSession.sparkContext.defaultParallelism
+    return vecs.select(
+        "vec_id",
+        "label",
+        *keep,
+        *[
+            F.slice("v", s * d + 1, d).alias(f"_vs{s}")
+            for s in range(m)
+        ],
+    ).repartition(n)
+
+
+def _pq8_dists_col(s: int, books: dict) -> Column:
+    """256-entry distance array of subspace ``s``: the monotone 2-term
+    form |cs_j|^2 - 2<vs, cs_j> (the |vs|^2 term is constant across
+    candidates, so dropping it preserves the argmin; the oracle ranks
+    by the same 2-term expression). The codebook is a FLAT folded
+    literal indexed as flat[j*d + dd]; the inner fold accumulates
+    acc + vs[dd]*cs[dd] strictly left-to-right — the same op order as
+    DuckDB's list_dot_product, so near-ties break identically."""
+    js = sorted(books[s])
+    d = len(books[s][js[0]])
+    flat = _dbl_arr_lit([x for j in js for x in books[s][j]])
+    cn = _dbl_arr_lit([_seq_dot(books[s][j], books[s][j]) for j in js])
+    vs = F.col(f"_vs{s}")
+
+    def dist(j: Column) -> Column:
+        inner = F.aggregate(
+            F.sequence(F.lit(1), F.lit(d)),
+            F.lit(0.0),
+            lambda acc, dd: acc
+            + F.element_at(vs, dd.cast("int"))
+            * F.element_at(flat, (j * d + dd).cast("int")),
         )
-        adc = adc + F.element_at(_dbl_arr_lit(lut[s]), idx + 1)
-    return adc
+        return F.element_at(cn, (j + 1).cast("int")) - 2 * inner
+
+    return F.transform(F.sequence(F.lit(0), F.lit(len(js) - 1)), dist)
+
+
+def _pq8_with_dists(
+    sliced: DataFrame, books: dict, keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """One projection adding the per-subspace distance arrays — built
+    once so downstream argmin consumers (pack AND training) reference
+    columns instead of re-evaluating 2048 folds per use. A single
+    select keeps eager analysis to one pass."""
+    m = len(books)
+    return sliced.select(
+        "vec_id",
+        "label",
+        *keep,
+        *[F.col(f"_vs{s}") for s in range(m)],
+        *[_pq8_dists_col(s, books).alias(f"_d{s}") for s in range(m)],
+    )
+
+
+def _pq8_idx(s: int) -> Column:
+    """0-based argmin over the ``_d{s}`` distance array (ties -> lowest
+    j via array_position's first-match, matching the oracle's
+    (dist ASC, j ASC) row_number)."""
+    d = F.col(f"_d{s}")
+    return (F.array_position(d, F.array_min(d)) - 1).cast("int")
 
 
 # ---------------------------------------------------------------------------
@@ -2037,9 +1574,9 @@ def _adc_expr(lut: list[list[float]], m: int, bits: int = 8) -> Column:
 #   vectorized across rows/codes — one rounded multiply and one rounded
 #   add per step, the exact op sequence of the interpreted
 #   `F.aggregate` fold and of DuckDB's list_dot_product);
-# - the distance forms mirror each family's expression verbatim
-#   (2-term `cn - 2*inner` for the 256-entry books, 3-term
-#   `vv - 2*inner + cc` for the seed family, same parenthesization);
+# - the distance forms mirror each spec's expression verbatim
+#   (2-term `cn - 2*inner`, 3-term `vv - 2*inner + cc`, same
+#   parenthesization);
 # - np.argmin / np.argmax return the FIRST extremum, matching
 #   array_position(first-match) ties -> lowest code / lowest cid.
 # - FINITE-INPUT PRECONDITION (r11 ADVICE): on a NaN/Inf embedding or
@@ -2076,7 +1613,7 @@ def _js_np_udf(
 ) -> Column:
     """pandas_udf column: full vector ``v`` -> array<int> of the ``m``
     per-subspace 0-based nearest-code indexes (sorted-j codebook
-    order). ``form`` mirrors the family's distance expression exactly:
+    order). ``form`` mirrors the spec's distance expression exactly:
     "2term" = ``cn[j] - 2*inner`` (:func:`_pq8_dists_col`), "3term" =
     ``vv - 2*inner + cc`` (:func:`_sub_dists`)."""
     mats = [
@@ -2138,130 +1675,85 @@ def _cell_np_udf(cents: dict[int, list[float]]) -> Column:
     return F.pandas_udf(_cells, "bigint")(F.col("v"))
 
 
-def _pack_js(js: Column, m: int, bits: int) -> list[Column]:
-    """Pack the ``m`` code indexes into bigint word column(s) — the
-    identical shift-sum the expression packers emit (Java << wraps,
-    matching the oracle's HUGEINT unwrap)."""
-    words: list[Column] = []
-    # 64//bits codes per word unconditionally (r11 ADVICE): identical
-    # words for both current callers (m=8/bits=3 -> 21/word >= m, and
-    # bits=8 -> 8/word), and removes the silent all-m-fit-one-word
-    # assumption a future bits=3, m>21 caller would corrupt on
-    per = 64 // bits
-    for w in range((m + per - 1) // per):
-        word = F.lit(0).cast("bigint")
-        for s in range(w * per, min((w + 1) * per, m)):
-            word = word + F.shiftleft(
-                F.element_at(js, s + 1).cast("bigint"), bits * (s - w * per)
-            )
-        words.append(word)
-    return words
+# ---------------------------------------------------------------------------
+# The spec-driven quantizer: seed books, Lloyd training, packing, LUT and
+# ADC scan — one implementation for every PQSpec.
+# ---------------------------------------------------------------------------
 
 
-def _pq8_family_books(
-    vecs: DataFrame, train_iters: int, m: int, d: int
+def _pq_seed_books(
+    vecs: DataFrame, spec: PQSpec
 ) -> dict[int, dict[int, list[float]]]:
-    """Seed (``train_iters == 0``) or Lloyd-trained 256-entry books for
-    the 8-bit family — the codes and the query LUT must always share
-    one book set, so variants obtain both from this single dispatch."""
-    if train_iters == 0:
-        return _pq8_books(vecs, m=m, d=d)
-    return _pq8_lloyd_books(vecs, train_iters, m=m, d=d)
+    """books[s][j] = seed vector (j+1)'s dims [s*d, (s+1)*d) — bounded
+    collect of the 2^bits seed rows (the untrained codebook, a plan
+    constant). Memoized per (corpus, m, d, bits)."""
 
-
-def _pq8_dists_col(s: int, books: dict) -> Column:
-    """256-entry distance array of subspace ``s``: the monotone 2-term
-    form |cs_j|^2 - 2<vs, cs_j> (the |vs|^2 term is constant across
-    candidates, so dropping it preserves the argmin; the oracle ranks
-    by the same 2-term expression). The codebook is a FLAT folded
-    literal indexed as flat[j*d + dd]; the inner fold accumulates
-    acc + vs[dd]*cs[dd] strictly left-to-right — the same op order as
-    DuckDB's list_dot_product, so near-ties break identically."""
-    js = sorted(books[s])
-    d = len(books[s][js[0]])
-    flat = _dbl_arr_lit([x for j in js for x in books[s][j]])
-    cn = _dbl_arr_lit([_seq_dot(books[s][j], books[s][j]) for j in js])
-    vs = F.col(f"_vs{s}")
-
-    def dist(j: Column) -> Column:
-        inner = F.aggregate(
-            F.sequence(F.lit(1), F.lit(d)),
-            F.lit(0.0),
-            lambda acc, dd: acc
-            + F.element_at(vs, dd.cast("int"))
-            * F.element_at(flat, (j * d + dd).cast("int")),
+    def build() -> dict[int, dict[int, list[float]]]:
+        rows = (
+            vecs.where(F.col("vec_id").between(1, spec.k))
+            .select("vec_id", "v")
+            .collect()
         )
-        return F.element_at(cn, (j + 1).cast("int")) - 2 * inner
+        full = {r["vec_id"] - 1: [float(x) for x in r["v"]] for r in rows}
+        if len(full) != spec.k:
+            # loud contract failure instead of silently mis-coding: the
+            # deterministic seeding needs every id in the seed band
+            # present (a book with a hole shifts every later position,
+            # so codes would stop matching the oracle's vec_id - 1)
+            raise ValueError(
+                f"PQ seed band incomplete: corpus has {len(full)} of the"
+                f" {spec.k} seed vectors (vec_id 1..{spec.k})"
+                " — PQ codebooks need the full band; train on the"
+                " unfiltered corpus or re-seed"
+            )
+        d = spec.d
+        return {
+            s: {j: v[s * d : (s + 1) * d] for j, v in full.items()}
+            for s in range(spec.m)
+        }
 
-    return F.transform(F.sequence(F.lit(0), F.lit(len(js) - 1)), dist)
-
-
-def _pq8_with_dists(
-    sliced: DataFrame, books: dict, keep: tuple[str, ...] = ()
-) -> DataFrame:
-    """One projection adding the per-subspace distance arrays — built
-    once so downstream argmin consumers (pack AND training) reference
-    columns instead of re-evaluating 2048 folds per use. A single
-    select keeps eager analysis to one pass."""
-    m = len(books)
-    return sliced.select(
-        "vec_id",
-        "label",
-        *keep,
-        *[F.col(f"_vs{s}") for s in range(m)],
-        *[_pq8_dists_col(s, books).alias(f"_d{s}") for s in range(m)],
-    )
-
-
-def _pq8_idx(s: int) -> Column:
-    """0-based argmin over the ``_d{s}`` distance array (ties -> lowest
-    j via array_position's first-match, matching the oracle's
-    (dist ASC, j ASC) row_number)."""
-    d = F.col(f"_d{s}")
-    return (F.array_position(d, F.array_min(d)) - 1).cast("int")
-
-
-def _pq8_pack(vecs: DataFrame, books: dict) -> DataFrame:
-    pre = vecs.select(
-        "vec_id",
-        "label",
-        _js_np_udf(books, PQ_M, PQ_DIMS, "2term").alias("_js"),
-    )
-    [word] = _pack_js(F.col("_js"), PQ_M, PQ8_BITS)
-    return pre.select("vec_id", "label", word.alias("pq_code"))
-
-
-def _pq8_lloyd_books(
-    vecs: DataFrame, iters: int = 1, m: int = PQ_M, d: int = PQ_DIMS
-) -> dict[int, dict[int, list[float]]]:
-    """Memoized front of :func:`_pq8_lloyd_books_impl` — the trained
-    books are a deterministic function of (corpus, iters, m, d), so the
-    Lloyd passes run once per process per corpus/params."""
     return _memo_trained(
-        "pq8_lloyd_books",
-        vecs,
-        (iters, m, d),
-        lambda: _pq8_lloyd_books_impl(vecs, iters, m, d),
+        "pq_seed_books", vecs, (spec.m, spec.d, spec.bits), build
     )
 
 
-def _pq8_lloyd_books_impl(
-    vecs: DataFrame, iters: int = 1, m: int = PQ_M, d: int = PQ_DIMS
+def _pq_books(
+    vecs: DataFrame, spec: PQSpec, train_iters: int
 ) -> dict[int, dict[int, list[float]]]:
-    """Exact-decimal Lloyd training of the 256-entry sub-codebooks —
-    the same nano-unit integer-mean kernel as :func:`_pq_lloyd_codebooks`
-    at the FAISS-standard codebook size. Per iteration: one assignment
-    projection, one explode to (s, j, dim, nano), one bounded aggregate
-    collected as <= m x 256 x d = 16384 rows (the codebook itself;
-    corpus-size independent). A code that lost all members keeps its
-    centroid."""
-    books = _pq8_books(vecs, m=m, d=d)
+    """Seed (``train_iters == 0``) or Lloyd-trained books — codes and the
+    query LUT must always share one book set, so every variant obtains
+    both from this single dispatch. Trained books memoize per (corpus,
+    iters, spec): the Lloyd passes run once per process."""
+    if train_iters == 0:
+        return _pq_seed_books(vecs, spec)
+    return _memo_trained(
+        "pq_lloyd_books",
+        vecs,
+        (train_iters, spec),
+        lambda: _pq_lloyd_books_impl(vecs, spec, train_iters),
+    )
+
+
+def _pq_lloyd_books_impl(
+    vecs: DataFrame, spec: PQSpec, iters: int
+) -> dict[int, dict[int, list[float]]]:
+    """``iters`` exact-decimal Lloyd iterations over the sub-codebooks:
+    assign every subvector to its nearest entry (the spec's argmin),
+    recompute each (subspace, code) centroid as the exact nano-unit
+    integer mean of its members — the SAME engine-stable k-means update
+    as ``_lloyd_refined_cells``, run in the m subspaces independently
+    (FAISS-style PQ training, determinized). Per iteration: one
+    assignment projection, one explode to (s, j, dim, nano), one bounded
+    aggregate collected as <= m x 2^bits x d rows. A code that lost all
+    members keeps its centroid."""
+    m, d = spec.m, spec.d
+    books = _pq_seed_books(vecs, spec)
     nano = F.expr(
         f"CAST(round(CAST(comp AS DECIMAL(30,15)) * {_NANO}, 0) AS BIGINT)"
     )
     for _ in range(iters):
         pre = vecs.select(
-            "v", _js_np_udf(books, m, d, "2term").alias("_js")
+            "v", _js_np_udf(books, m, d, spec.form).alias("_js")
         )
         assigned = [
             F.struct(
@@ -2297,122 +1789,405 @@ def _pq8_lloyd_books_impl(
                     if (s, j) in got
                     else list(books[s][j])
                 )
-                for j in range(PQ8_K)
+                for j in range(spec.k)
             }
             for s in range(m)
         }
     return books
 
 
-def embedding_pq8_codes(emb: DataFrame, train_iters: int = 0) -> DataFrame:
-    """(vec_id, label, pq_code): 8-bit-per-subspace product-quantizer
-    codes — the FAISS-standard 256-entry sub-codebooks, one signed
-    BIGINT per vector (8 bytes vs 512 raw: 64x). Pure projection (one
-    folded flat-literal codebook per subspace, monotone 2-term argmin,
-    shift pack); quantizing 100 TB is one map pass. ``train_iters > 0``
-    first runs that many exact-decimal Lloyd iterations per subspace."""
-    vecs = _vectors(emb)
-    books = (
-        _pq8_books(vecs)
-        if train_iters == 0
-        else _pq8_lloyd_books(vecs, train_iters)
-    )
-    return _pq8_pack(vecs, books)
-
-
-def ann_pq8_adc_topk(
-    emb: DataFrame, query_id: int = 0, k: int = TOP_K, train_iters: int = 0
+def _pq_pack(
+    vecs: DataFrame,
+    spec: PQSpec,
+    books: dict,
+    cents: dict[int, list[float]] | None = None,
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Approximate top-k by 8-bit PQ asymmetric distance: the query's
-    raw vector builds an 8x256 exact-L2 lookup table driver-side (2048
-    plan constants — the same per-query artifact FAISS keeps in L1),
-    and each corpus vector's distance is 8 LUT lookups indexed from its
-    packed code. The scan reads ONLY the 8-byte code column. Distances
-    use the full 3-term expansion (the VALUE must be the true quantized
-    L2^2, unlike the assignment argmin where the query term cancels).
-    ``train_iters`` selects Lloyd-trained books; codes and LUT always
-    share one book set."""
-    vecs = _vectors(emb)
-    books = _pq8_family_books(vecs, train_iters, PQ_M, PQ_DIMS)
-    qv = _query_vec(vecs, query_id)
-    lut = _pq_query_lut(qv, books, PQ_M, PQ_DIMS)
-    codes = _pq8_pack(vecs, books)
-    adc = _adc_expr(lut, PQ_M)
-    return (
-        codes.where(F.col("vec_id") != query_id)
-        .select("vec_id", "label", _round6(adc).alias("adc"))
+    """(vec_id, label, *keep, [cell], <word cols>) in ONE projection:
+    the per-subspace argmin kernel, then the bigint shift-sum pack
+    (Java << wraps, matching the oracle's HUGEINT unwrap). ``cents``
+    adds the max-cosine cell id in the same pass — cell and code are
+    both row-local functions of ``v``, so fusing them replaces a
+    cells x codes vec_id self-join (a second corpus scan plus a join
+    exchange, guide §2.4); a downstream probe-cell filter substitutes
+    through the projection, so codes are computed only for rows that
+    survive the cell cut."""
+    cell = [] if cents is None else ["cell"]
+    pre = vecs.select(
+        "vec_id",
+        "label",
+        *keep,
+        *([] if cents is None else [_cell_np_udf(cents).alias("cell")]),
+        _js_np_udf(books, spec.m, spec.d, spec.form).alias("_js"),
+    )
+    js = F.col("_js")
+    per = spec.per_word
+    words = []
+    for w, name in enumerate(spec.word_cols):
+        word = F.lit(0).cast("bigint")
+        for s in range(w * per, min((w + 1) * per, spec.m)):
+            word = word + F.shiftleft(
+                F.element_at(js, s + 1).cast("bigint"),
+                spec.bits * (s - w * per),
+            )
+        words.append(word.alias(name))
+    return pre.select("vec_id", "label", *keep, *cell, *words)
+
+
+def _pq_query_lut(
+    qv: list[float], books: dict[int, dict[int, list[float]]], spec: PQSpec
+) -> list[list[float]]:
+    """Per-subspace exact-L2^2 query lookup table: LUT[s][j] = |q_s|^2
+    - 2<q_s, c_sj> + |c_sj|^2 over codebook entries in sorted-j order.
+    The single home of the 3-term expansion — the VALUE must be the
+    true quantized L2^2 (unlike the assignment argmin, where the query
+    term cancels); every ADC variant folds this table into plan
+    constants via :func:`_adc_expr`."""
+    d = spec.d
+    lut = []
+    for s in range(spec.m):
+        qs = qv[s * d : (s + 1) * d]
+        qq = _seq_dot(qs, qs)
+        lut.append(
+            [
+                qq
+                - 2 * _seq_dot(qs, books[s][j])
+                + _seq_dot(books[s][j], books[s][j])
+                for j in sorted(books[s])
+            ]
+        )
+    return lut
+
+
+def _adc_expr(lut: list[list[float]], spec: PQSpec) -> Column:
+    """Asymmetric-distance column: ``m`` LUT lookups, each indexed by
+    unpacking a ``bits``-wide field from the packed code word(s). All
+    LUT rows fold to array literals via `_dbl_arr_lit`, so the scan
+    reads only the code column(s)."""
+    cols, per = spec.word_cols, spec.per_word
+    adc = F.lit(0.0)
+    for s in range(spec.m):
+        idx = (
+            F.shiftrightunsigned(F.col(cols[s // per]), spec.bits * (s % per))
+            .bitwiseAND(F.lit(spec.k - 1))
+            .cast("int")
+        )
+        adc = adc + F.element_at(_dbl_arr_lit(lut[s]), idx + 1)
+    return adc
+
+
+def _adc_topk(
+    coded: DataFrame,
+    adc: Column,
+    query_id: int,
+    k: int,
+    probe: list[int] | None = None,
+    shortlist: int | None = None,
+    vecs: DataFrame | None = None,
+) -> DataFrame:
+    """The one ADC ranking body: drop the query row (and, with
+    ``probe``, every row outside the probed cells), rank by ROUND6(adc)
+    with vec_id tiebreak, TakeOrdered. With ``shortlist``, the cut keeps
+    that many candidates and ONLY their raw vectors are fetched from
+    ``vecs`` (broadcast semi-join — a key-lookup at scale) for the exact
+    3-term L2 final order. The shortlist ranks on the rounded ADC so
+    sub-1e-6 engine float noise collapses before the cut and both
+    engines admit the identical candidate set."""
+    cond = F.col("vec_id") != query_id
+    if probe is not None:
+        cond = cond & F.col("cell").isin(*probe)
+    cands = coded.where(cond)
+    if shortlist is None:
+        return (
+            cands.select("vec_id", "label", _round6(adc).alias("adc"))
+            .orderBy(F.asc("adc"), F.asc("vec_id"))
+            .limit(k)
+        )
+    short = (
+        cands.select("vec_id", _round6(adc).alias("adc"))
         .orderBy(F.asc("adc"), F.asc("vec_id"))
+        .limit(shortlist)
+    )
+    qv = _query_vec(vecs, query_id)
+    l2 = F.lit(_seq_dot(qv, qv)) - 2 * dot(_dbl_arr_lit(qv), F.col("v")) + dot(
+        F.col("v"), F.col("v")
+    )
+    return (
+        vecs.join(F.broadcast(short.select("vec_id")), "vec_id")
+        .select("vec_id", "label", _round6(l2).alias("l2"))
+        .orderBy(F.asc("l2"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def _pq8_dist2(a: str, b: str) -> str:
-    """The monotone 2-term assignment distance, textually fixed so the
-    oracle's op order matches the Spark lambda's exactly."""
-    return f"{_DOT_SQL.format(a=b, b=b)} - 2 * {_DOT_SQL.format(a=a, b=b)}"
+# ---------------------------------------------------------------------------
+# OPQ-lite: balanced-energy dimension permutation before PQ16. Product
+# quantization quantizes each subspace independently, so recall suffers when
+# a few subspaces hold most of the corpus energy (their 256 entries must
+# cover a wider spread). OPQ (Ge et al., CVPR 2013, "Optimized Product
+# Quantization") fixes this with a learned rotation; its non-parametric
+# initializer — eigenvalue allocation, balancing per-subspace variance by
+# REORDERING dimensions — captures most of the gain for near-independent
+# dims and is a pure permutation, which keeps everything deterministic and
+# oracle-expressible. The permutation snake-deals the energy-ranked dims
+# across the 16 subspaces (each gets one dim from each energy quartile);
+# energies are exact nano-unit integer sums, so both engines derive the
+# identical permutation. At 100 TB: the permutation is 64 plan constants
+# from one bounded aggregate; applying it is free inside the existing
+# one-map-pass quantization projection.
+# ---------------------------------------------------------------------------
 
 
-def _pq_word_cols(m: int) -> list[str]:
-    """Packed-code column names: one signed bigint per 8 subspaces —
-    ``pq_code`` for the 8-byte PQ8 layout, ``pq_lo``/``pq_hi`` for the
-    16-byte PQ16 one."""
-    words = (m + 7) // 8
-    return ["pq_code"] if words == 1 else ["pq_lo", "pq_hi"]
+def _opq_perm(vecs: DataFrame) -> list[int]:
+    """perm[newpos] = source dim. Dims are ranked by total corpus energy
+    (exact integer sum of squared nano-unit components — DECIMAL(38,0)
+    sums on the Spark side, HUGEINT on the oracle's, both overflow-free
+    and bit-identical) and snake-dealt across the OPQ16 subspaces: rank
+    r lands in subspace (m-1 - r%m if (r//m) odd else r%m), slot r//m.
+    One bounded aggregate; the collect is exactly |dims| = 64 rows.
+    Memoized per corpus."""
+    return _memo_trained("opq_perm", vecs, (), lambda: _opq_perm_impl(vecs))
 
 
-def _pq8_ctes(
+def _opq_perm_impl(vecs: DataFrame) -> list[int]:
+    m, d = OPQ16.m, OPQ16.d
+    nano = F.expr(
+        f"CAST(round(CAST(comp AS DECIMAL(30,15)) * {_NANO}, 0) AS BIGINT)"
+    )
+    nv = F.col("nv").cast("decimal(19,0)")
+    rows = (
+        vecs.select(F.posexplode(F.col("v")).alias("dim", "comp"))
+        .select("dim", nano.alias("nv"))
+        .select("dim", (nv * nv).alias("nv2"))
+        .groupBy("dim")
+        .agg(F.sum(F.col("nv2").cast("decimal(38,0)")).alias("energy"))
+        .collect()
+    )
+    ranked = sorted(rows, key=lambda r: (-int(r["energy"]), r["dim"]))
+    perm = [0] * (m * d)
+    for r, row in enumerate(ranked):
+        rnd, col = divmod(r, m)
+        if rnd % 2 == 1:
+            col = m - 1 - col
+        perm[col * d + rnd] = row["dim"]
+    return perm
+
+
+def _opq_vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, label, v) with v permuted by the balanced-energy
+    permutation — a pure projection over 64 plan-constant indexes."""
+    vecs = _vectors(emb)
+    perm = _opq_perm(vecs)
+    rv = F.array(*[F.element_at(F.col("v"), p + 1) for p in perm])
+    return vecs.select("vec_id", "label", rv.alias("v"))
+
+
+# ---------------------------------------------------------------------------
+# Public PQ operators: each takes the PQSpec to run.
+# ---------------------------------------------------------------------------
+
+
+def embedding_pq_codes(
+    emb: DataFrame, spec: PQSpec, train_iters: int = 0
+) -> DataFrame:
+    """(vec_id, label, <spec.word_cols>): each vector's packed
+    product-quantizer code — per subspace, the index of the nearest
+    sub-centroid, packed little-endian at ``spec.bits`` per subspace.
+    ``train_iters > 0`` first refines the sub-codebooks with that many
+    exact-decimal Lloyd iterations.
+
+    Pure PROJECTION: sub-codebooks are plan constants, each subspace's
+    argmin is a row-local kernel (ties -> lowest code), and the pack is
+    integer shifts. No shuffle at any scale — quantizing 100 TB is one
+    map pass (plus ``train_iters`` bounded-aggregate training passes)."""
+    vecs = _opq_vectors(emb) if spec.opq else _vectors(emb)
+    return _pq_pack(vecs, spec, _pq_books(vecs, spec, train_iters))
+
+
+def ann_pq_adc_topk(
+    emb: DataFrame,
+    spec: PQSpec,
+    query_id: int = 0,
+    k: int = TOP_K,
+    train_iters: int = 0,
+    shortlist: int | None = None,
+) -> DataFrame:
+    """Approximate top-k by PQ asymmetric distance computation: the
+    query's RAW vector builds an m x 2^bits lookup table (LUT[s][j] =
+    exact L2^2 of the query's subspace-s slice to sub-centroid j — plan
+    constants computed driver-side with the same sequential dot the
+    relational form evaluates), and every corpus vector's approximate
+    distance is the sum of m LUT lookups indexed by its code — the scan
+    touches ONLY the packed code column(s), never raw vectors.
+
+    Returned distance is the raw ADC value (rounded at 6 decimals on
+    both sides); ordering is (adc ASC, vec_id ASC). ``train_iters``
+    selects Lloyd-trained books (codes AND the LUT use the same books).
+    ``shortlist`` turns it into two-stage retrieval, the production
+    serving pattern: the ADC scan shortlists that many candidates and
+    only their raw vectors are fetched for an exact-L2 rerank (recall ~=
+    the probability the true top-k survives the larger ADC cut)."""
+    vecs = _opq_vectors(emb) if spec.opq else _vectors(emb)
+    books = _pq_books(vecs, spec, train_iters)
+    lut = _pq_query_lut(_query_vec(vecs, query_id), books, spec)
+    return _adc_topk(
+        _pq_pack(vecs, spec, books),
+        _adc_expr(lut, spec),
+        query_id,
+        k,
+        shortlist=shortlist,
+        vecs=vecs,
+    )
+
+
+def ann_ivfpq_topk(
+    emb: DataFrame,
+    spec: PQSpec,
+    query_id: int = 0,
+    k: int = TOP_K,
+    iters: int = 1,
+    nprobe: int = IVF_NPROBE,
+    train_iters: int = 0,
+    shortlist: int | None = None,
+) -> DataFrame:
+    """Full IVF-PQ: probe the query's ``nprobe`` nearest Lloyd-refined
+    cells, rank candidates by PQ asymmetric distance — the standard
+    billion-scale ANN architecture (faiss IndexIVFPQ / IVFADC shape)
+    with both state components deterministic and engine-stable. The
+    cells and the codes both quantize the raw vectors (``spec.opq`` is
+    not applied), and ``shortlist`` adds the exact-L2 rerank stage as in
+    :func:`ann_pq_adc_topk`.
+
+    At 100 TB: the scan is doubly reduced — the cell filter prunes to
+    ~nprobe/|cells| of the corpus, and what remains is scanned as
+    packed CODES against a LUT of plan constants. Raw vectors are
+    touched only to assign cells/codes (one fused projection pass at
+    ingest), for the single query row, and for |shortlist| rerank
+    key-fetches."""
+    vecs = _vectors(emb)
+    _, cents = _lloyd_refined_cells(vecs, iters=iters)
+    qv = _query_vec(vecs, query_id)
+    books = _pq_books(vecs, spec, train_iters)
+    return _adc_topk(
+        _pq_pack(vecs, spec, books, cents=cents),
+        _adc_expr(_pq_query_lut(qv, books, spec), spec),
+        query_id,
+        k,
+        probe=_probe_cells(qv, cents, nprobe),
+        shortlist=shortlist,
+        vecs=vecs,
+    )
+
+
+# ---------------------------------------------------------------------------
+# PQ oracle SQL: one codes chain and one ADC/rerank tail for every spec.
+# ---------------------------------------------------------------------------
+
+
+def _dist_sql(a: str, b: str, form: str = "3term") -> str:
+    """SQL twin of the Spark distance forms, textually fixed so DuckDB's
+    op order matches the Spark kernels exactly: "3term" = exact L2^2
+    |a|^2 - 2<a,b> + |b|^2, "2term" = the monotone |b|^2 - 2<a,b>."""
+    cross = f"2 * {_DOT_SQL.format(a=a, b=b)}"
+    if form == "2term":
+        return f"{_DOT_SQL.format(a=b, b=b)} - {cross}"
+    return (
+        f"{_DOT_SQL.format(a=a, b=a)} - {cross} + {_DOT_SQL.format(a=b, b=b)}"
+    )
+
+
+def _opq_e_ctes() -> list[str]:
+    """Oracle CTEs deriving the SAME permuted ``e``: exact HUGEINT
+    energy per dim, rank, snake-deal arithmetic, ordered array_agg."""
+    m, d = OPQ16.m, OPQ16.d
+    return [
+        _scan_cte("raw"),
+        "dimstats AS (\n"
+        "  SELECT dim, SUM(CAST(nv AS HUGEINT) * CAST(nv AS HUGEINT))"
+        " AS energy\n"
+        "  FROM (SELECT unnest(range(len(v))) AS dim,\n"
+        f"               CAST(round(CAST(unnest(v) AS DECIMAL(30,15)) *"
+        f" {_NANO}, 0)\n"
+        "                    AS BIGINT) AS nv\n"
+        "        FROM raw)\n"
+        "  GROUP BY dim\n)",
+        "dimperm AS (\n"
+        "  SELECT dim AS olddim,\n"
+        "         row_number() OVER (ORDER BY energy DESC, dim ASC) - 1"
+        " AS r\n"
+        "  FROM dimstats\n)",
+        "perm AS (\n"
+        f"  SELECT olddim,\n"
+        f"         (CASE WHEN (r // {m}) % 2 = 1 THEN {m - 1} - (r % {m})\n"
+        f"               ELSE r % {m} END) * {d} + (r // {m}) AS newpos\n"
+        "  FROM dimperm\n)",
+        "e AS (\n"
+        "  SELECT vec_id, ANY_VALUE(label) AS label,\n"
+        "         array_agg(v[olddim + 1] ORDER BY newpos) AS v\n"
+        "  FROM raw, perm\n"
+        "  GROUP BY vec_id\n)",
+    ]
+
+
+def _pq_ctes(
+    spec: PQSpec,
     train_iters: int,
-    m: int = PQ_M,
-    d: int = PQ_DIMS,
     include_e: bool = True,
     e_name: str = "e",
 ) -> tuple[list[str], str]:
-    """Oracle CTE chain ending in ``codes`` (vec_id, label, <word
-    cols>) + the final codebook relation name. csubs{i}(s, j, cs);
-    packing goes through HUGEINT with the explicit two's-complement
-    wrap, one output word per 8 subspaces (the mults relation carries
-    (s, mult, w): multiplier 256^(s%8) into word s//8).
-    ``include_e=False`` skips the leading ``e`` CTE so a caller can
-    compose this chain behind its own ``e`` relation (the IVF-PQ16
-    oracle shares the lloyd-cells chain's ``e``; the OPQ oracle feeds
-    a permuted ``e``); ``e_name`` points the chain at a differently
-    named vector relation (the residual-PQ oracle quantizes ``er``,
-    the per-cell residuals, while the lloyd chain's ``e`` keeps the
-    raw vectors)."""
-    words = (m + 7) // 8
-    wcols = _pq_word_cols(m)
+    """Oracle CTE chain ending in ``codes`` (vec_id, label, <word cols>)
+    + the final codebook relation name. csubs{i}(s, j, cs) are the
+    books (seeds: j = vec_id - 1); each training iteration is (assign
+    subvectors by the spec's form -> nano-unit exact means per
+    (subspace, code, dim) -> next books), the relational mirror of
+    :func:`_pq_lloyd_books_impl`. Packing goes through HUGEINT with the
+    explicit two's-complement wrap; the mults relation carries (s, mult,
+    w): multiplier 2^(bits*(s % per_word)) into word s // per_word.
+
+    ``include_e=False`` skips the leading vector relation so a caller
+    can compose this chain behind its own (the IVF-PQ oracles share the
+    lloyd-cells chain's ``e``); ``e_name`` points the chain at a
+    differently named vector relation (the residual-PQ oracle quantizes
+    ``er``, the per-cell residuals). With ``include_e`` an OPQ spec
+    leads with the permuted ``e`` (:func:`_opq_e_ctes`)."""
+    m, d, per = spec.m, spec.d, spec.per_word
+    wcols = spec.word_cols
     mult_rows = ", ".join(
-        f"({s}, CAST({(1 << (PQ8_BITS * (s % 8)))} AS HUGEINT), {s // 8})"
+        f"({s}, CAST({1 << (spec.bits * (s % per))} AS HUGEINT), {s // per})"
         for s in range(m)
     )
-    e_cte = (
-        f"{e_name} AS (\n"
-        f"  SELECT vec_id, label, {_VEC_SQL.format(e='embedding')} AS v"
-        " FROM embeddings\n)"
-    )
+    head = []
+    if include_e:
+        head = _opq_e_ctes() if spec.opq else [_scan_cte(e_name)]
+
+    def ranked(books: str) -> str:
+        return (
+            "row_number() OVER (\n"
+            "             PARTITION BY subs.vec_id, subs.s\n"
+            f"             ORDER BY {_dist_sql('subs.vs', 'c.cs', spec.form)}"
+            " ASC, c.j ASC\n"
+            "           ) AS rn\n"
+            f"    FROM subs JOIN {books} c ON subs.s = c.s"
+        )
+
     ctes = [
-        *([e_cte] if include_e else []),
+        *head,
         f"mults AS (SELECT * FROM (VALUES {mult_rows}) AS t(s, mult, w))",
         "subs AS (\n"
         "  SELECT vec_id, label, s,\n"
         f"         v[s * {d} + 1 : s * {d} + {d}] AS vs\n"
         f"  FROM {e_name}, unnest(range({m})) AS r(s)\n)",
         "csubs0 AS (\n"
-        f"  SELECT s, vec_id - {PQ8_SEED_LO} AS j,\n"
+        "  SELECT s, vec_id - 1 AS j,\n"
         f"         v[s * {d} + 1 : s * {d} + {d}] AS cs\n"
         f"  FROM {e_name}, unnest(range({m})) AS r(s)\n"
-        f"  WHERE vec_id BETWEEN {PQ8_SEED_LO} AND {PQ8_SEED_HI}\n)",
+        f"  WHERE vec_id BETWEEN 1 AND {spec.k}\n)",
     ]
     for i in range(train_iters):
         ctes.append(
             f"assign{i} AS (\n"
-            "  SELECT subs.vec_id, subs.s, c.j, subs.vs,\n"
-            "         row_number() OVER (\n"
-            "           PARTITION BY subs.vec_id, subs.s\n"
-            f"           ORDER BY {_pq8_dist2('subs.vs', 'c.cs')} ASC,"
-            " c.j ASC\n"
-            "         ) AS rn\n"
-            f"  FROM subs JOIN csubs{i} c ON subs.s = c.s\n)"
+            f"  SELECT subs.vec_id, subs.s, c.j, subs.vs,\n"
+            f"         {ranked(f'csubs{i}')}\n)"
         )
         ctes.append(
             f"pm{i} AS (\n"
@@ -2445,7 +2220,7 @@ def _pq8_ctes(
     word_sums = ",\n".join(
         f"         SUM(CASE WHEN m.w = {w} THEN CAST(a.j AS HUGEINT)"
         f" * m.mult ELSE CAST(0 AS HUGEINT) END) AS p{w}"
-        for w in range(words)
+        for w in range(len(wcols))
     )
     ctes.append(
         "packed AS (\n"
@@ -2453,20 +2228,15 @@ def _pq8_ctes(
         f"{word_sums}\n"
         "  FROM (\n"
         "    SELECT subs.vec_id, subs.s, c.j,\n"
-        "           row_number() OVER (\n"
-        "             PARTITION BY subs.vec_id, subs.s\n"
-        f"             ORDER BY {_pq8_dist2('subs.vs', 'c.cs')} ASC,"
-        " c.j ASC\n"
-        "           ) AS rn\n"
-        f"    FROM subs JOIN {fin} c ON subs.s = c.s\n"
+        f"           {ranked(fin)}\n"
         "  ) a JOIN mults m ON a.s = m.s\n"
         "  WHERE a.rn = 1\n"
         "  GROUP BY a.vec_id\n)"
     )
     word_wraps = ",\n".join(
         f"         CAST(CASE WHEN p{w} >= {_TWO63} THEN p{w} - {_TWO64}\n"
-        f"              ELSE p{w} END AS BIGINT) AS {wcols[w]}"
-        for w in range(words)
+        f"              ELSE p{w} END AS BIGINT) AS {c}"
+        for w, c in enumerate(wcols)
     )
     ctes.append(
         "codes AS (\n"
@@ -2478,697 +2248,159 @@ def _pq8_ctes(
     return ctes, fin
 
 
-def embedding_pq8_codes_sql(
-    train_iters: int = 0,
-    m: int = PQ_M,
-    d: int = PQ_DIMS,
-    pre_ctes: list[str] | None = None,
-) -> str:
-    ctes, _ = _pq8_ctes(train_iters, m=m, d=d, include_e=pre_ctes is None)
-    ctes = list(pre_ctes or []) + ctes
-    body = ",\n".join(ctes)
-    cols = ", ".join(_pq_word_cols(m))
-    return f"""
-WITH {body}
-SELECT vec_id, label, {cols} FROM codes
-"""
+def _ivf_ctes(iters: int, query_id: int, nprobe: int) -> list[str]:
+    """The lloyd-cells chain plus ``qcells``: the query's ``nprobe``
+    nearest refined cells, straight from the final assignment ranking."""
+    return _lloyd_cells_ctes(iters) + [
+        "qcells AS (SELECT cid AS cell FROM scored_fin WHERE"
+        f" vec_id = {query_id} AND rn <= {nprobe})"
+    ]
 
 
-def ann_pq8_adc_topk_sql(
-    query_id: int = 0,
-    k: int = TOP_K,
-    train_iters: int = 0,
-    m: int = PQ_M,
-    d: int = PQ_DIMS,
-    pre_ctes: list[str] | None = None,
+def _adc_sql(
+    spec: PQSpec,
+    ctes: list[str],
+    fin: str,
+    query_id: int,
+    k: int,
+    shortlist: int | None = None,
+    probed: bool = False,
+    cell_luts: bool = False,
 ) -> str:
-    """Oracle twin: codes + LUT from the same final codebook relation;
-    code words unpacked through the HUGEINT un-wrap, 3-term LUT
-    distances. ``pre_ctes`` supplies a caller-built ``e`` relation
-    (the OPQ oracle's permuted vectors) in place of the default scan."""
-    ctes, fin = _pq8_ctes(train_iters, m=m, d=d, include_e=pre_ctes is None)
-    ctes = list(pre_ctes or []) + ctes
-    body = ",\n".join(ctes)
-    wcols = _pq_word_cols(m)
+    """The one ADC/rerank oracle tail: LUT from the final book relation
+    ``fin`` (exact 3-term L2^2 of the query's subvectors), code words
+    unpacked through the HUGEINT un-wrap, ADC summed per candidate, then
+    the top-k by ROUND6(adc) — or, with ``shortlist``, the rounded-ADC
+    shortlist and an exact 3-term L2 rerank over ``e``. ``probed`` keeps
+    only members of the probed cells (``cells_fin`` x ``qcells``);
+    ``cell_luts`` scores each probed cell's members with that cell's own
+    LUT, built from a ``qsubs(cell, s, vs)`` relation (residual
+    IVF-PQ)."""
+    wcols = spec.word_cols
     unwraps = ",\n".join(
         f"         CASE WHEN {c} < 0 THEN CAST({c} AS HUGEINT) + {_TWO64}"
         f"\n              ELSE CAST({c} AS HUGEINT) END AS up{w}"
         for w, c in enumerate(wcols)
     )
-    word_pick = (
+    word = (
         "u.up0"
         if len(wcols) == 1
         else "CASE m.w WHEN 0 THEN u.up0 ELSE u.up1 END"
     )
-    return f"""
-WITH {body},
-lut AS (
-  SELECT c.s, c.j,
-         {_DOT_SQL.format(a='qs.vs', b='qs.vs')}
-           - 2 * {_DOT_SQL.format(a='qs.vs', b='c.cs')}
-           + {_DOT_SQL.format(a='c.cs', b='c.cs')} AS dist
-  FROM {fin} c
-  JOIN (SELECT s, vs FROM subs WHERE vec_id = {query_id}) qs
-    ON qs.s = c.s
-),
-unwrapped AS (
-  SELECT vec_id, label,
-{unwraps}
-  FROM codes WHERE vec_id != {query_id}
-),
-unpacked AS (
-  SELECT u.vec_id, u.label, m.s,
-         CAST((({word_pick}) // m.mult) % {PQ8_K} AS BIGINT) AS j
-  FROM unwrapped u CROSS JOIN mults m
-),
-adcs AS (
-  SELECT vec_id, ANY_VALUE(label) AS label, SUM(lut.dist) AS adc
-  FROM unpacked JOIN lut ON unpacked.s = lut.s AND unpacked.j = lut.j
-  GROUP BY vec_id
-)
-SELECT vec_id, label, {_ROUND6_SQL.format(x='adc')} AS adc
-FROM adcs
-ORDER BY adc ASC, vec_id ASC
-LIMIT {k}
-"""
-
-
-# ---------------------------------------------------------------------------
-# PQ16: 16 subspaces x 4 dims x 8 bits = 16-byte codes (32x compression).
-# More, narrower subspaces cut per-subspace quantization distortion — the
-# standard FAISS recall knob once k*=256 is maxed. Measured at sf0.1
-# (SCALE.md): recall@10 0.513 untrained / 0.580 Lloyd-trained — above the
-# IVF multiprobe family at a scan that reads 16 bytes/vector. Same
-# machinery as PQ8 with (m, d) = (16, 4); the code spans TWO signed
-# bigints (subspaces 0-7 -> pq_lo, 8-15 -> pq_hi).
-# ---------------------------------------------------------------------------
-
-PQ16_M = 16
-PQ16_DIMS = 4
-
-
-def _pq16_pack(
-    vecs: DataFrame, books: dict, keep: tuple[str, ...] = ()
-) -> DataFrame:
-    pre = vecs.select(
-        "vec_id",
-        "label",
-        *keep,
-        _js_np_udf(books, PQ16_M, PQ16_DIMS, "2term").alias("_js"),
+    # the per-cell LUT variant carries each candidate's cell through to
+    # the LUT join
+    lut_cell, cand_cell, u_cell, join_cell = (
+        (
+            "qs.cell, ",
+            "cands.cell, ",
+            "u.cell, ",
+            "unpacked.cell = lut.cell AND ",
+        )
+        if cell_luts
+        else ("", "", "", "")
     )
-    lo, hi = _pack_js(F.col("_js"), PQ16_M, PQ8_BITS)
-    return pre.select(
-        "vec_id", "label", *keep, lo.alias("pq_lo"), hi.alias("pq_hi")
+    qsubs = (
+        "qsubs"
+        if cell_luts
+        else f"(SELECT s, vs FROM subs WHERE vec_id = {query_id})"
     )
-
-
-def _pq16_cells_codes(
-    vecs: DataFrame,
-    cents: dict[int, list[float]],
-    books: dict[int, dict[int, list[float]]],
-) -> DataFrame:
-    """(vec_id, label, cell, pq_lo, pq_hi) in ONE projection over one
-    corpus scan — the fused replacement for
-    ``cells.select("vec_id","cell").join(codes, "vec_id")`` in the
-    IVF-PQ16 variants. Cell and code words are both pure per-row
-    functions of ``v``, so the vec_id self-join of two projections of
-    the SAME relation bought nothing and cost a second full scan plus a
-    join exchange (guide §2.4: remove shuffles outright). Values are
-    identical by construction: :func:`_cell_expr` and the
-    `_pq8_idx`-packed words are the exact expressions the unfused
-    ``_with_cells`` / ``_pq16_pack`` emit. A downstream probe-cell
-    filter substitutes through the projection, so the 16x256 distance
-    arrays are evaluated only for rows that survive the cell cut."""
-    pre = vecs.select(
-        "vec_id",
-        "label",
-        _cell_np_udf(cents).alias("cell"),
-        _js_np_udf(books, PQ16_M, PQ16_DIMS, "2term").alias("_js"),
-    )
-    lo, hi = _pack_js(F.col("_js"), PQ16_M, PQ8_BITS)
-    return pre.select(
-        "vec_id",
-        "label",
-        "cell",
-        lo.alias("pq_lo"),
-        hi.alias("pq_hi"),
-    )
-
-
-def embedding_pq16_codes(emb: DataFrame, train_iters: int = 0) -> DataFrame:
-    """(vec_id, label, pq_lo, pq_hi): 16-subspace product-quantizer
-    codes — 16 bytes/vector at 32x compression, the recall-over-memory
-    point of the PQ family (4-dim subspaces quantize far tighter than
-    8-dim ones at the same 256-entry codebooks). Same single-map-pass
-    plan as PQ8; two packed words because 16 x 8 bits outgrows one
-    bigint."""
-    vecs = _vectors(emb)
-    books = (
-        _pq8_books(vecs, m=PQ16_M, d=PQ16_DIMS)
-        if train_iters == 0
-        else _pq8_lloyd_books(vecs, train_iters, m=PQ16_M, d=PQ16_DIMS)
-    )
-    return _pq16_pack(vecs, books)
-
-
-def ann_pq16_adc_topk(
-    emb: DataFrame, query_id: int = 0, k: int = TOP_K, train_iters: int = 0
-) -> DataFrame:
-    """16-subspace PQ asymmetric-distance top-k: a 16x256 exact-L2 LUT
-    (4096 folded plan constants), 16 lookups per vector unpacked from
-    the two code words. The highest-recall memory-bound scan in the
-    family (SCALE.md table)."""
-    vecs = _vectors(emb)
-    books = _pq8_family_books(vecs, train_iters, PQ16_M, PQ16_DIMS)
-    qv = _query_vec(vecs, query_id)
-    lut = _pq_query_lut(qv, books, PQ16_M, PQ16_DIMS)
-    codes = _pq16_pack(vecs, books)
-    adc = _adc_expr(lut, PQ16_M)
-    return (
-        codes.where(F.col("vec_id") != query_id)
-        .select("vec_id", "label", _round6(adc).alias("adc"))
-        .orderBy(F.asc("adc"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def embedding_pq16_codes_sql(train_iters: int = 0) -> str:
-    return embedding_pq8_codes_sql(train_iters, m=PQ16_M, d=PQ16_DIMS)
-
-
-def ann_pq16_adc_topk_sql(
-    query_id: int = 0, k: int = TOP_K, train_iters: int = 0
-) -> str:
-    return ann_pq8_adc_topk_sql(
-        query_id, k, train_iters, m=PQ16_M, d=PQ16_DIMS
-    )
-
-
-# ---------------------------------------------------------------------------
-# OPQ-lite: balanced-energy dimension permutation before PQ16. Product
-# quantization quantizes each subspace independently, so recall suffers when
-# a few subspaces hold most of the corpus energy (their 256 entries must
-# cover a wider spread). OPQ (Ge et al., CVPR 2013, "Optimized Product
-# Quantization") fixes this with a learned rotation; its non-parametric
-# initializer — eigenvalue allocation, balancing per-subspace variance by
-# REORDERING dimensions — captures most of the gain for near-independent
-# dims and is a pure permutation, which keeps everything deterministic and
-# oracle-expressible. The permutation snake-deals the energy-ranked dims
-# across the 16 subspaces (each gets one dim from each energy quartile);
-# energies are exact nano-unit integer sums, so both engines derive the
-# identical permutation. At 100 TB: the permutation is 64 plan constants
-# from one bounded aggregate; applying it is free inside the existing
-# one-map-pass quantization projection.
-# ---------------------------------------------------------------------------
-
-
-def _opq_perm(
-    vecs: DataFrame, m: int = PQ16_M, d: int = PQ16_DIMS
-) -> list[int]:
-    """perm[newpos] = source dim. Dims are ranked by total corpus energy
-    (exact integer sum of squared nano-unit components — DECIMAL(38,0)
-    sums on the Spark side, HUGEINT on the oracle's, both overflow-free
-    and bit-identical) and snake-dealt across the ``m`` subspaces: rank
-    r lands in subspace (m-1 - r%m if (r//m) odd else r%m), slot r//m.
-    One bounded aggregate; the collect is exactly |dims| = 64 rows.
-    Memoized per (corpus, m, d)."""
-    return _memo_trained(
-        "opq_perm", vecs, (m, d), lambda: _opq_perm_impl(vecs, m, d)
-    )
-
-
-def _opq_perm_impl(vecs: DataFrame, m: int, d: int) -> list[int]:
-    nano = F.expr(
-        f"CAST(round(CAST(comp AS DECIMAL(30,15)) * {_NANO}, 0) AS BIGINT)"
-    )
-    nv = F.col("nv").cast("decimal(19,0)")
-    rows = (
-        vecs.select(F.posexplode(F.col("v")).alias("dim", "comp"))
-        .select("dim", nano.alias("nv"))
-        .select("dim", (nv * nv).alias("nv2"))
-        .groupBy("dim")
-        .agg(F.sum(F.col("nv2").cast("decimal(38,0)")).alias("energy"))
-        .collect()
-    )
-    ranked = sorted(rows, key=lambda r: (-int(r["energy"]), r["dim"]))
-    perm = [0] * (m * d)
-    for r, row in enumerate(ranked):
-        rnd, col = divmod(r, m)
-        if rnd % 2 == 1:
-            col = m - 1 - col
-        perm[col * d + rnd] = row["dim"]
-    return perm
-
-
-def _opq_vectors(emb: DataFrame) -> DataFrame:
-    """(vec_id, label, v) with v permuted by the balanced-energy
-    permutation — a pure projection over 64 plan-constant indexes."""
-    vecs = _vectors(emb)
-    perm = _opq_perm(vecs)
-    rv = F.array(*[F.element_at(F.col("v"), p + 1) for p in perm])
-    return vecs.select("vec_id", "label", rv.alias("v"))
-
-
-def _opq_e_ctes(m: int = PQ16_M, d: int = PQ16_DIMS) -> list[str]:
-    """Oracle CTEs deriving the SAME permuted ``e``: exact HUGEINT
-    energy per dim, rank, snake-deal arithmetic, ordered array_agg."""
-    return [
-        "raw AS (\n"
-        f"  SELECT vec_id, label, {_VEC_SQL.format(e='embedding')} AS v"
-        " FROM embeddings\n)",
-        "dimstats AS (\n"
-        "  SELECT dim, SUM(CAST(nv AS HUGEINT) * CAST(nv AS HUGEINT))"
-        " AS energy\n"
-        "  FROM (SELECT unnest(range(len(v))) AS dim,\n"
-        f"               CAST(round(CAST(unnest(v) AS DECIMAL(30,15)) *"
-        f" {_NANO}, 0)\n"
-        "                    AS BIGINT) AS nv\n"
-        "        FROM raw)\n"
-        "  GROUP BY dim\n)",
-        "dimperm AS (\n"
-        "  SELECT dim AS olddim,\n"
-        "         row_number() OVER (ORDER BY energy DESC, dim ASC) - 1"
-        " AS r\n"
-        "  FROM dimstats\n)",
-        "perm AS (\n"
-        f"  SELECT olddim,\n"
-        f"         (CASE WHEN (r // {m}) % 2 = 1 THEN {m - 1} - (r % {m})\n"
-        f"               ELSE r % {m} END) * {d} + (r // {m}) AS newpos\n"
-        "  FROM dimperm\n)",
-        "e AS (\n"
-        "  SELECT vec_id, ANY_VALUE(label) AS label,\n"
-        "         array_agg(v[olddim + 1] ORDER BY newpos) AS v\n"
-        "  FROM raw, perm\n"
+    ctes = [
+        *ctes,
+        "lut AS (\n"
+        f"  SELECT {lut_cell}c.s, c.j,\n"
+        f"         {_dist_sql('qs.vs', 'c.cs')} AS dist\n"
+        f"  FROM {fin} c JOIN {qsubs} qs ON qs.s = c.s\n)",
+    ]
+    if probed:
+        ctes.append(
+            "cands AS (\n"
+            "  SELECT cf.vec_id, cf.cell\n"
+            "  FROM cells_fin cf JOIN qcells USING (cell)\n"
+            f"  WHERE cf.vec_id != {query_id}\n)"
+        )
+        src = "codes JOIN cands ON codes.vec_id = cands.vec_id"
+    else:
+        src = f"codes WHERE codes.vec_id != {query_id}"
+    ctes += [
+        "unwrapped AS (\n"
+        f"  SELECT codes.vec_id, codes.label, {cand_cell}\n"
+        f"{unwraps}\n"
+        f"  FROM {src}\n)",
+        "unpacked AS (\n"
+        f"  SELECT u.vec_id, u.label, {u_cell}m.s,\n"
+        f"         CAST((({word}) // m.mult) % {spec.k} AS BIGINT) AS j\n"
+        "  FROM unwrapped u CROSS JOIN mults m\n)",
+        "adcs AS (\n"
+        "  SELECT vec_id, ANY_VALUE(label) AS label, SUM(lut.dist) AS adc\n"
+        f"  FROM unpacked JOIN lut ON {join_cell}"
+        "unpacked.s = lut.s AND unpacked.j = lut.j\n"
         "  GROUP BY vec_id\n)",
     ]
-
-
-def embedding_opq16_codes(emb: DataFrame, train_iters: int = 1) -> DataFrame:
-    """PQ16 codes over balanced-energy-permuted vectors — the OPQ-init
-    quantizer. Identical storage shape to :func:`embedding_pq16_codes`
-    (two packed bigints, 32x compression); the permutation costs one
-    bounded aggregate at train time and nothing at scan time."""
-    vecs = _opq_vectors(emb)
-    books = _pq8_family_books(vecs, train_iters, PQ16_M, PQ16_DIMS)
-    return _pq16_pack(vecs, books)
-
-
-def ann_opq16_adc_topk(
-    emb: DataFrame, query_id: int = 0, k: int = TOP_K, train_iters: int = 1
-) -> DataFrame:
-    """16-subspace PQ ADC top-k over the balanced-energy permutation:
-    the query vector passes through the same 64-constant permutation
-    projection, so LUT subspaces line up with the permuted codes. Same
-    16-lookup scan as :func:`ann_pq16_adc_topk`."""
-    vecs = _opq_vectors(emb)
-    books = _pq8_family_books(vecs, train_iters, PQ16_M, PQ16_DIMS)
-    qv = _query_vec(vecs, query_id)
-    lut = _pq_query_lut(qv, books, PQ16_M, PQ16_DIMS)
-    codes = _pq16_pack(vecs, books)
-    adc = _adc_expr(lut, PQ16_M)
-    return (
-        codes.where(F.col("vec_id") != query_id)
-        .select("vec_id", "label", _round6(adc).alias("adc"))
-        .orderBy(F.asc("adc"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def embedding_opq16_codes_sql(train_iters: int = 1) -> str:
-    return embedding_pq8_codes_sql(
-        train_iters, m=PQ16_M, d=PQ16_DIMS, pre_ctes=_opq_e_ctes()
-    )
-
-
-def ann_opq16_adc_topk_sql(
-    query_id: int = 0, k: int = TOP_K, train_iters: int = 1
-) -> str:
-    return ann_pq8_adc_topk_sql(
-        query_id, k, train_iters, m=PQ16_M, d=PQ16_DIMS,
-        pre_ctes=_opq_e_ctes(),
-    )
-
-
-def ann_pq16_rerank_topk(
-    emb: DataFrame,
-    query_id: int = 0,
-    k: int = TOP_K,
-    shortlist: int = 64,
-    train_iters: int = 1,
-) -> DataFrame:
-    """Two-stage retrieval, the production serving pattern: a 16-byte
-    ADC scan shortlists ``shortlist`` candidates, then ONLY those rows'
-    raw vectors are fetched for an exact-L2 rerank to the final top-k.
-    Recall ~= the probability the true top-k survives a 6.4x-larger ADC
-    cut — near-exact at a scan that still reads 16 bytes/vector
-    (measured in SCALE.md); the raw 512-byte vectors are touched for
-    just |shortlist| rows (at scale: a key-lookup fetch, not a scan).
-
-    Determinism: the shortlist ranks by ROUND6(adc) with vec_id
-    tiebreak — sub-1e-6 engine float-noise collapses before the cut, so
-    both engines admit the identical candidate set; the exact stage
-    uses the sequential-fold dot (== DuckDB list_dot_product op order),
-    the proven bit-identical kernel."""
-    vecs = _vectors(emb)
-    books = _pq8_family_books(vecs, train_iters, PQ16_M, PQ16_DIMS)
-    qv = _query_vec(vecs, query_id)
-    lut = _pq_query_lut(qv, books, PQ16_M, PQ16_DIMS)
-    codes = _pq16_pack(vecs, books)
-    adc = _adc_expr(lut, PQ16_M)
-    short = (
-        codes.where(F.col("vec_id") != query_id)
-        .select("vec_id", _round6(adc).alias("adc"))
-        .orderBy(F.asc("adc"), F.asc("vec_id"))
-        .limit(shortlist)
-    )
-    qlit = _dbl_arr_lit(qv)
-    qq_full = _seq_dot(qv, qv)
-    l2 = F.lit(qq_full) - 2 * dot(qlit, F.col("v")) + dot(
-        F.col("v"), F.col("v")
-    )
-    return (
-        vecs.join(F.broadcast(short.select("vec_id")), "vec_id")
-        .select("vec_id", "label", _round6(l2).alias("l2"))
-        .orderBy(F.asc("l2"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def ann_pq16_rerank_topk_sql(
-    query_id: int = 0,
-    k: int = TOP_K,
-    shortlist: int = 64,
-    train_iters: int = 1,
-) -> str:
-    """Oracle twin: the PQ16 codes/LUT chain, rounded-ADC shortlist,
-    exact 3-term L2 rerank over the shortlist join."""
-    ctes, fin = _pq8_ctes(train_iters, m=PQ16_M, d=PQ16_DIMS)
-    body = ",\n".join(ctes)
-    wcols = _pq_word_cols(PQ16_M)
-    unwraps = ",\n".join(
-        f"         CASE WHEN {c} < 0 THEN CAST({c} AS HUGEINT) + {_TWO64}"
-        f"\n              ELSE CAST({c} AS HUGEINT) END AS up{w}"
-        for w, c in enumerate(wcols)
-    )
-    return f"""
-WITH {body},
-lut AS (
-  SELECT c.s, c.j,
-         {_DOT_SQL.format(a='qs.vs', b='qs.vs')}
-           - 2 * {_DOT_SQL.format(a='qs.vs', b='c.cs')}
-           + {_DOT_SQL.format(a='c.cs', b='c.cs')} AS dist
-  FROM {fin} c
-  JOIN (SELECT s, vs FROM subs WHERE vec_id = {query_id}) qs
-    ON qs.s = c.s
-),
-unwrapped AS (
-  SELECT vec_id, label,
-{unwraps}
-  FROM codes WHERE vec_id != {query_id}
-),
-unpacked AS (
-  SELECT u.vec_id, m.s,
-         CAST(((CASE m.w WHEN 0 THEN u.up0 ELSE u.up1 END) // m.mult)
-              % {PQ8_K} AS BIGINT) AS j
-  FROM unwrapped u CROSS JOIN mults m
-),
-adcs AS (
-  SELECT vec_id, SUM(lut.dist) AS adc
-  FROM unpacked JOIN lut ON unpacked.s = lut.s AND unpacked.j = lut.j
-  GROUP BY vec_id
-),
-short AS (
-  SELECT vec_id, {_ROUND6_SQL.format(x='adc')} AS adc
-  FROM adcs
-  ORDER BY {_ROUND6_SQL.format(x='adc')} ASC, vec_id ASC
-  LIMIT {shortlist}
-),
-q AS (SELECT v AS qv FROM e WHERE vec_id = {query_id})
-SELECT e.vec_id, e.label,
-       {_ROUND6_SQL.format(
-           x=_DOT_SQL.format(a='qv', b='qv')
-           + ' - 2 * ' + _DOT_SQL.format(a='qv', b='e.v')
-           + ' + ' + _DOT_SQL.format(a='e.v', b='e.v')
-       )} AS l2
-FROM e JOIN short ON e.vec_id = short.vec_id, q
-ORDER BY l2 ASC, e.vec_id ASC
-LIMIT {k}
-"""
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ16: the production composition — Lloyd-refined IVF cells prune the
-# corpus to ~nprobe/|cells|, and the survivors are ranked by 16-subspace
-# 256-entry trained-PQ asymmetric distance over 16-byte packed codes. This
-# is faiss.IndexIVFPQ(quantizer, d, nlist, 16, 8), determinized: at 100 TB
-# the scan cost is (nprobe/|cells|) x 16 bytes/vector — both index
-# structures are one ingest-time projection pass each, and the per-query
-# state (probe list + 16x256 LUT) is plan constants.
-# ---------------------------------------------------------------------------
-
-
-def ann_ivfpq16_topk(
-    emb: DataFrame,
-    query_id: int = 0,
-    k: int = TOP_K,
-    iters: int = 1,
-    nprobe: int = IVF_NPROBE,
-    train_iters: int = 1,
-) -> DataFrame:
-    """Full IVF-PQ at production codebook size: probe the query's
-    ``nprobe`` nearest Lloyd-refined cells, rank candidates by
-    16-subspace trained-PQ asymmetric distance (16x256 exact-L2 LUT, 16
-    lookups per vector from the two packed code words). Both trained
-    states are the exact-decimal deterministic kernels the standalone
-    variants prove (`_lloyd_refined_cells`, `_pq8_lloyd_books`), so the
-    composition stays engine-stable end to end."""
-    vecs = _vectors(emb)
-    _, cents = _lloyd_refined_cells(vecs, iters=iters)
-    qv = _query_vec(vecs, query_id)
-    probe_cells = _probe_cells(qv, cents, nprobe)
-    books = _pq8_family_books(vecs, train_iters, PQ16_M, PQ16_DIMS)
-    lut = _pq_query_lut(qv, books, PQ16_M, PQ16_DIMS)
-    adc = _adc_expr(lut, PQ16_M)
-    # r10: cell + code words fused into one projection
-    # (_pq16_cells_codes) — see its docstring; the probe-cell filter
-    # substitutes through the projection so PQ distance arrays are
-    # evaluated only for probed-cell rows
-    return (
-        _pq16_cells_codes(vecs, cents, books)
-        .where(
-            (F.col("vec_id") != query_id)
-            & (F.col("cell").isin(*probe_cells))
+    r6 = _ROUND6_SQL.format(x="adc")
+    if shortlist is None:
+        final = (
+            f"SELECT vec_id, label, {r6} AS adc\nFROM adcs\n"
+            f"ORDER BY adc ASC, vec_id ASC\nLIMIT {k}"
         )
-        .select("vec_id", "label", _round6(adc).alias("adc"))
-        .orderBy(F.asc("adc"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def ann_ivfpq16_topk_sql(
-    query_id: int = 0,
-    k: int = TOP_K,
-    iters: int = 1,
-    nprobe: int = IVF_NPROBE,
-    train_iters: int = 1,
-) -> str:
-    """Oracle twin: the lloyd-cells chain and the PQ16 trained-codes
-    chain composed behind one shared ``e``; probe cells from the final
-    cell assignment ranking, candidates = probed cells_fin members,
-    ADC summed over HUGEINT-unwrapped code indexes against the
-    relational LUT."""
-    ctes = _lloyd_cells_ctes(iters)
-    ctes.append(
-        "qcells AS (SELECT cid AS cell FROM scored_fin WHERE"
-        f" vec_id = {query_id} AND rn <= {nprobe})"
-    )
-    pq_ctes, fin = _pq8_ctes(
-        train_iters, m=PQ16_M, d=PQ16_DIMS, include_e=False
-    )
-    ctes.extend(pq_ctes)
-    wcols = _pq_word_cols(PQ16_M)
-    unwraps = ",\n".join(
-        f"         CASE WHEN {c} < 0 THEN CAST({c} AS HUGEINT) + {_TWO64}"
-        f"\n              ELSE CAST({c} AS HUGEINT) END AS up{w}"
-        for w, c in enumerate(wcols)
-    )
-    body = ",\n".join(ctes)
-    return f"""
-WITH {body},
-lut AS (
-  SELECT c.s, c.j,
-         {_DOT_SQL.format(a='qs.vs', b='qs.vs')}
-           - 2 * {_DOT_SQL.format(a='qs.vs', b='c.cs')}
-           + {_DOT_SQL.format(a='c.cs', b='c.cs')} AS dist
-  FROM {fin} c
-  JOIN (SELECT s, vs FROM subs WHERE vec_id = {query_id}) qs
-    ON qs.s = c.s
-),
-cands AS (
-  SELECT cf.vec_id
-  FROM cells_fin cf JOIN qcells USING (cell)
-  WHERE cf.vec_id != {query_id}
-),
-unwrapped AS (
-  SELECT codes.vec_id, codes.label,
-{unwraps}
-  FROM codes JOIN cands ON codes.vec_id = cands.vec_id
-),
-unpacked AS (
-  SELECT u.vec_id, u.label, m.s,
-         CAST(((CASE m.w WHEN 0 THEN u.up0 ELSE u.up1 END) // m.mult)
-              % {PQ8_K} AS BIGINT) AS j
-  FROM unwrapped u CROSS JOIN mults m
-),
-adcs AS (
-  SELECT vec_id, ANY_VALUE(label) AS label, SUM(lut.dist) AS adc
-  FROM unpacked JOIN lut ON unpacked.s = lut.s AND unpacked.j = lut.j
-  GROUP BY vec_id
-)
-SELECT vec_id, label, {_ROUND6_SQL.format(x='adc')} AS adc
-FROM adcs
-ORDER BY adc ASC, vec_id ASC
-LIMIT {k}
-"""
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ16 + exact rerank: the complete production retrieval stack —
-# cell pruning cuts the scan to ~nprobe/|cells| of the corpus, the
-# 16-byte ADC ranks the survivors, and only a bounded shortlist of raw
-# vectors is fetched for the exact final order. This is the
-# faiss IndexIVFPQ + refine/reconstruct serving pattern: at 100 TB the
-# per-query cost is (nprobe/|cells|) x 16 bytes/vector scanned plus
-# |shortlist| key-lookups — no stage touches the full raw-vector
-# column.
-# ---------------------------------------------------------------------------
-
-
-def ann_ivfpq16_rerank_topk(
-    emb: DataFrame,
-    query_id: int = 0,
-    k: int = TOP_K,
-    iters: int = 1,
-    nprobe: int = IVF_NPROBE,
-    shortlist: int = 64,
-    train_iters: int = 1,
-) -> DataFrame:
-    """Three-stage retrieval: probe the query's ``nprobe`` Lloyd cells,
-    shortlist ``shortlist`` candidates by trained-PQ16 asymmetric
-    distance (ranked on ROUND6(adc) with vec_id tiebreak so sub-1e-6
-    float noise collapses before the cut — both engines admit the
-    identical candidate set), then exact-L2 rerank ONLY the shortlist
-    rows' raw vectors. Composes the three individually-proven kernels
-    (`_lloyd_refined_cells`, `_pq8_lloyd_books`, the sequential-fold
-    dot) without new state."""
-    vecs = _vectors(emb)
-    _, cents = _lloyd_refined_cells(vecs, iters=iters)
-    qv = _query_vec(vecs, query_id)
-    probe_cells = _probe_cells(qv, cents, nprobe)
-    books = _pq8_family_books(vecs, train_iters, PQ16_M, PQ16_DIMS)
-    lut = _pq_query_lut(qv, books, PQ16_M, PQ16_DIMS)
-    adc = _adc_expr(lut, PQ16_M)
-    # r10: cells x codes self-join fused into one projection
-    # (_pq16_cells_codes, see its docstring)
-    short = (
-        _pq16_cells_codes(vecs, cents, books)
-        .where(
-            (F.col("vec_id") != query_id)
-            & (F.col("cell").isin(*probe_cells))
+    else:
+        ctes += [
+            f"short AS (\n  SELECT vec_id FROM adcs\n"
+            f"  ORDER BY {r6} ASC, vec_id ASC\n  LIMIT {shortlist}\n)",
+            f"q AS (SELECT v AS qv FROM e WHERE vec_id = {query_id})",
+        ]
+        l2 = _ROUND6_SQL.format(x=_dist_sql("qv", "e.v"))
+        final = (
+            f"SELECT e.vec_id, e.label, {l2} AS l2\n"
+            "FROM e JOIN short ON e.vec_id = short.vec_id, q\n"
+            f"ORDER BY l2 ASC, e.vec_id ASC\nLIMIT {k}"
         )
-        .select("vec_id", _round6(adc).alias("adc"))
-        .orderBy(F.asc("adc"), F.asc("vec_id"))
-        .limit(shortlist)
-    )
-    qlit = _dbl_arr_lit(qv)
-    qq_full = _seq_dot(qv, qv)
-    l2 = F.lit(qq_full) - 2 * dot(qlit, F.col("v")) + dot(
-        F.col("v"), F.col("v")
-    )
-    return (
-        vecs.join(F.broadcast(short.select("vec_id")), "vec_id")
-        .select("vec_id", "label", _round6(l2).alias("l2"))
-        .orderBy(F.asc("l2"), F.asc("vec_id"))
-        .limit(k)
-    )
+    body = ",\n".join(ctes)
+    return f"\nWITH {body}\n{final}\n"
 
 
-def ann_ivfpq16_rerank_topk_sql(
+def embedding_pq_codes_sql(spec: PQSpec, train_iters: int = 0) -> str:
+    ctes, _ = _pq_ctes(spec, train_iters)
+    body = ",\n".join(ctes)
+    return f"""
+WITH {body}
+SELECT vec_id, label, {", ".join(spec.word_cols)} FROM codes
+"""
+
+
+def ann_pq_adc_topk_sql(
+    spec: PQSpec,
+    query_id: int = 0,
+    k: int = TOP_K,
+    train_iters: int = 0,
+    shortlist: int | None = None,
+) -> str:
+    """Oracle twin: codes + LUT from the same final book relation."""
+    ctes, fin = _pq_ctes(spec, train_iters)
+    return _adc_sql(spec, ctes, fin, query_id, k, shortlist)
+
+
+def ann_ivfpq_topk_sql(
+    spec: PQSpec,
     query_id: int = 0,
     k: int = TOP_K,
     iters: int = 1,
     nprobe: int = IVF_NPROBE,
-    shortlist: int = 64,
-    train_iters: int = 1,
+    train_iters: int = 0,
+    shortlist: int | None = None,
 ) -> str:
-    """Oracle twin: lloyd-cells + trained-PQ16 chains behind one shared
-    ``e``, probe-cell candidate cut, rounded-ADC shortlist, exact
-    3-term L2 rerank over the shortlist join."""
-    ctes = _lloyd_cells_ctes(iters)
-    ctes.append(
-        "qcells AS (SELECT cid AS cell FROM scored_fin WHERE"
-        f" vec_id = {query_id} AND rn <= {nprobe})"
+    """Oracle twin: the lloyd-cells chain and the PQ codes chain
+    composed behind one shared ``e``; probe cells from the final cell
+    assignment ranking, candidates = probed ``cells_fin`` members."""
+    pq_ctes, fin = _pq_ctes(spec, train_iters, include_e=False)
+    return _adc_sql(
+        spec,
+        _ivf_ctes(iters, query_id, nprobe) + pq_ctes,
+        fin,
+        query_id,
+        k,
+        shortlist,
+        probed=True,
     )
-    pq_ctes, fin = _pq8_ctes(
-        train_iters, m=PQ16_M, d=PQ16_DIMS, include_e=False
-    )
-    ctes.extend(pq_ctes)
-    wcols = _pq_word_cols(PQ16_M)
-    unwraps = ",\n".join(
-        f"         CASE WHEN {c} < 0 THEN CAST({c} AS HUGEINT) + {_TWO64}"
-        f"\n              ELSE CAST({c} AS HUGEINT) END AS up{w}"
-        for w, c in enumerate(wcols)
-    )
-    body = ",\n".join(ctes)
-    return f"""
-WITH {body},
-lut AS (
-  SELECT c.s, c.j,
-         {_DOT_SQL.format(a='qs.vs', b='qs.vs')}
-           - 2 * {_DOT_SQL.format(a='qs.vs', b='c.cs')}
-           + {_DOT_SQL.format(a='c.cs', b='c.cs')} AS dist
-  FROM {fin} c
-  JOIN (SELECT s, vs FROM subs WHERE vec_id = {query_id}) qs
-    ON qs.s = c.s
-),
-cands AS (
-  SELECT cf.vec_id
-  FROM cells_fin cf JOIN qcells USING (cell)
-  WHERE cf.vec_id != {query_id}
-),
-unwrapped AS (
-  SELECT codes.vec_id,
-{unwraps}
-  FROM codes JOIN cands ON codes.vec_id = cands.vec_id
-),
-unpacked AS (
-  SELECT u.vec_id, m.s,
-         CAST(((CASE m.w WHEN 0 THEN u.up0 ELSE u.up1 END) // m.mult)
-              % {PQ8_K} AS BIGINT) AS j
-  FROM unwrapped u CROSS JOIN mults m
-),
-adcs AS (
-  SELECT vec_id, SUM(lut.dist) AS adc
-  FROM unpacked JOIN lut ON unpacked.s = lut.s AND unpacked.j = lut.j
-  GROUP BY vec_id
-),
-short AS (
-  SELECT vec_id, {_ROUND6_SQL.format(x='adc')} AS adc
-  FROM adcs
-  ORDER BY {_ROUND6_SQL.format(x='adc')} ASC, vec_id ASC
-  LIMIT {shortlist}
-),
-q AS (SELECT v AS qv FROM e WHERE vec_id = {query_id})
-SELECT e.vec_id, e.label,
-       {_ROUND6_SQL.format(
-           x=_DOT_SQL.format(a='qv', b='qv')
-           + ' - 2 * ' + _DOT_SQL.format(a='qv', b='e.v')
-           + ' + ' + _DOT_SQL.format(a='e.v', b='e.v')
-       )} AS l2
-FROM e JOIN short ON e.vec_id = short.vec_id, q
-ORDER BY l2 ASC, e.vec_id ASC
-LIMIT {k}
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -3426,19 +2658,15 @@ def build_ivfpq16_index(
 ) -> IvfPq16Index:
     """TRAIN + ADD: Lloyd-refine the coarse cells, train the PQ16
     codebooks (both memoized exact-decimal kernels), assign + pack
-    every vector, and pin the serving table with an eager
-    localCheckpoint so no later query re-runs assignment/packing.
-    In a persisted deployment, follow with :func:`write_ivfpq16_index`."""
+    every vector in ONE projection pass, and pin the serving table with
+    an eager localCheckpoint so no later query re-runs assignment/
+    packing. In a persisted deployment, follow with
+    :func:`write_ivfpq16_index`."""
     vecs = _vectors(emb)
     _, cents = _lloyd_refined_cells(vecs, iters=iters)
-    books = _pq8_family_books(vecs, train_iters, PQ16_M, PQ16_DIMS)
-    # r10: cell + code words assigned in ONE projection pass
-    # (_pq16_cells_codes) — the ADD step is a single corpus scan; the
-    # former cells x codes vec_id join re-scanned the corpus and paid a
-    # join exchange for row-local columns
+    books = _pq_books(vecs, PQ16, train_iters)
     coded = (
-        _pq16_cells_codes(vecs, cents, books)
-        .select("vec_id", "label", "cell", "pq_lo", "pq_hi")
+        _pq_pack(vecs, PQ16, books, cents=cents)
         # the ADD step: materialize once; survives catalog.clearCache()
         # (block-manager RDD blocks, not SQL cache)
         .localCheckpoint(eager=True)
@@ -3488,7 +2716,7 @@ def ivfpq16_index_for(
 ) -> IvfPq16Index:
     """Memoized :func:`build_ivfpq16_index` — one build per (session,
     corpus, params) per process; every serve call after the first runs
-    the pure serving plan. SPARK_GRAFT_TRAIN_CACHE=0 disables."""
+    the pure serving plan."""
     ck = _corpus_key(emb)
     if ck is None:
         return build_ivfpq16_index(emb, iters=iters, train_iters=train_iters)
@@ -3510,62 +2738,23 @@ def ann_ivfpq16_serve_topk(
     query_id: int = 0,
     k: int = TOP_K,
     nprobe: int = IVF_NPROBE,
+    shortlist: int | None = None,
 ) -> DataFrame:
     """SEARCH against a built index: probe-cell filter + 16-byte ADC +
     TakeOrdered over the serving table — no join, no training job.
-    Result-identical to :func:`ann_ivfpq16_topk` (same trained state,
-    same ranking); only the lifecycle differs."""
+    ``shortlist`` adds the refine step: ONLY the shortlist rows' raw
+    vectors are fetched for the exact-L2 final order. Result-identical
+    to :func:`ann_ivfpq_topk` over PQ16 with the index's trained state;
+    only the lifecycle differs."""
     qv = _query_vec(index.vecs, query_id)
-    probe = _probe_cells(qv, index.cents, nprobe)
-    lut = _pq_query_lut(qv, index.books, PQ16_M, PQ16_DIMS)
-    adc = _adc_expr(lut, PQ16_M)
-    return (
-        index.coded.where(
-            (F.col("vec_id") != query_id) & (F.col("cell").isin(*probe))
-        )
-        .select("vec_id", "label", _round6(adc).alias("adc"))
-        .orderBy(F.asc("adc"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def ann_ivfpq16_serve_rerank_topk(
-    index: IvfPq16Index,
-    query_id: int = 0,
-    k: int = TOP_K,
-    nprobe: int = IVF_NPROBE,
-    shortlist: int = 64,
-) -> DataFrame:
-    """SEARCH + refine against a built index: the ADC shortlist comes
-    off the serving table (cut on ROUND6(adc) + vec_id so both engines
-    admit the identical candidate set), then ONLY the shortlist rows'
-    raw vectors are fetched (broadcast semi-join — at scale a
-    key-lookup) for the exact-L2 final order. Result-identical to
-    :func:`ann_ivfpq16_rerank_topk`."""
-    qv = _query_vec(index.vecs, query_id)
-    probe = _probe_cells(qv, index.cents, nprobe)
-    lut = _pq_query_lut(qv, index.books, PQ16_M, PQ16_DIMS)
-    adc = _adc_expr(lut, PQ16_M)
-    short = (
-        index.coded.where(
-            (F.col("vec_id") != query_id) & (F.col("cell").isin(*probe))
-        )
-        .select("vec_id", _round6(adc).alias("adc"))
-        .orderBy(F.asc("adc"), F.asc("vec_id"))
-        .limit(shortlist)
-    )
-    qlit = _dbl_arr_lit(qv)
-    qq = _seq_dot(qv, qv)
-    l2 = (
-        F.lit(qq)
-        - 2 * dot(qlit, F.col("v"))
-        + dot(F.col("v"), F.col("v"))
-    )
-    return (
-        index.vecs.join(F.broadcast(short.select("vec_id")), "vec_id")
-        .select("vec_id", "label", _round6(l2).alias("l2"))
-        .orderBy(F.asc("l2"), F.asc("vec_id"))
-        .limit(k)
+    return _adc_topk(
+        index.coded,
+        _adc_expr(_pq_query_lut(qv, index.books, PQ16), PQ16),
+        query_id,
+        k,
+        probe=_probe_cells(qv, index.cents, nprobe),
+        shortlist=shortlist,
+        vecs=index.vecs,
     )
 
 
@@ -3609,14 +2798,10 @@ def ivfpq16_index_stats_sql(
     iters: int = 1, train_iters: int = 1
 ) -> str:
     """Oracle twin: the lloyd-cells chain and the PQ16 trained-codes
-    chain composed behind one shared ``e`` (the ann_ivfpq16_topk_sql
+    chain composed behind one shared ``e`` (the IVF-PQ oracle
     composition), census over the cells x codes join."""
-    ctes = _lloyd_cells_ctes(iters)
-    pq_ctes, _fin = _pq8_ctes(
-        train_iters, m=PQ16_M, d=PQ16_DIMS, include_e=False
-    )
-    ctes.extend(pq_ctes)
-    body = ",\n".join(ctes)
+    pq_ctes, _fin = _pq_ctes(PQ16, train_iters, include_e=False)
+    body = ",\n".join(_lloyd_cells_ctes(iters) + pq_ctes)
     return f"""
 WITH {body}
 SELECT cf.cell,
@@ -3740,43 +2925,29 @@ def ann_ivfpq16_residual_topk(
     their precision on within-cell structure, and each probed cell
     scores its candidates against the query's residual IN THAT CELL
     (per-cell LUT, a CASE over ``nprobe`` folded constant tables).
-    Same scan shape as :func:`ann_ivfpq16_topk`: probe-cell filter on
+    Same scan shape as :func:`ann_ivfpq_topk`: probe-cell filter on
     the codes scan, 16 lookups per candidate, TakeOrdered — the
     accuracy upgrade costs nothing at serve time."""
     vecs = _vectors(emb)
     cells, cents = _lloyd_refined_cells(vecs, iters=iters)
-    resid = _residual_vectors(cells, cents).select(
-        "vec_id", "label", "v"
-    )
-    books = _pq8_family_books(resid, train_iters, PQ16_M, PQ16_DIMS)
-    # r10: the residual relation already carries the cell id — keep it
+    resid = _residual_vectors(cells, cents)
+    books = _pq_books(resid.select("vec_id", "label", "v"), PQ16, train_iters)
+    # the residual relation already carries the cell id — keep it
     # through the pack projection instead of re-joining the cells
     # relation on vec_id (one corpus scan + a join exchange saved)
-    codes = _pq16_pack(
-        _residual_vectors(cells, cents), books, keep=("cell",)
-    )
+    codes = _pq_pack(resid, PQ16, books, keep=("cell",))
     qv = _query_vec(vecs, query_id)
     probe_cells = _probe_cells(qv, cents, nprobe)
     adc = None
     for c in probe_cells:
         qr = [qv[i] - cents[c][i] for i in range(len(qv))]
-        lut = _pq_query_lut(qr, books, PQ16_M, PQ16_DIMS)
-        branch = _adc_expr(lut, PQ16_M)
+        branch = _adc_expr(_pq_query_lut(qr, books, PQ16), PQ16)
         adc = (
             F.when(F.col("cell") == c, branch)
             if adc is None
             else adc.when(F.col("cell") == c, branch)
         )
-    return (
-        codes
-        .where(
-            (F.col("vec_id") != query_id)
-            & (F.col("cell").isin(*probe_cells))
-        )
-        .select("vec_id", "label", _round6(adc).alias("adc"))
-        .orderBy(F.asc("adc"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _adc_topk(codes, adc, query_id, k, probe=probe_cells)
 
 
 def ann_ivfpq16_residual_topk_sql(
@@ -3790,13 +2961,9 @@ def ann_ivfpq16_residual_topk_sql(
     joined to the final centroids) -> the PQ16 chain pointed at ``er``
     -> per-probed-cell query residual slices -> per-cell LUT join on
     (cell, s, j)."""
-    m, d = PQ16_M, PQ16_DIMS
-    ctes = _lloyd_cells_ctes(iters)
+    m, d = PQ16.m, PQ16.d
     fincents, fincv = f"cents{iters}", f"cv{iters}"
-    ctes.append(
-        "qcells AS (SELECT cid AS cell FROM scored_fin WHERE"
-        f" vec_id = {query_id} AND rn <= {nprobe})"
-    )
+    ctes = _ivf_ctes(iters, query_id, nprobe)
     ctes.append(
         "er AS (\n"
         "  SELECT cf.vec_id, cf.label,\n"
@@ -3805,9 +2972,7 @@ def ann_ivfpq16_residual_topk_sql(
         " AS v\n"
         f"  FROM cells_fin cf JOIN {fincents} cn ON cn.cid = cf.cell\n)"
     )
-    pq_ctes, fin = _pq8_ctes(
-        train_iters, m=m, d=d, include_e=False, e_name="er"
-    )
+    pq_ctes, fin = _pq_ctes(PQ16, train_iters, include_e=False, e_name="er")
     ctes.extend(pq_ctes)
     ctes.append(
         "qres AS (\n"
@@ -3823,49 +2988,9 @@ def ann_ivfpq16_residual_topk_sql(
         f"  SELECT cell, s, v[s * {d} + 1 : s * {d} + {d}] AS vs\n"
         f"  FROM qres, unnest(range({m})) AS r(s)\n)"
     )
-    wcols = _pq_word_cols(m)
-    unwraps = ",\n".join(
-        f"         CASE WHEN {c} < 0 THEN CAST({c} AS HUGEINT) + {_TWO64}"
-        f"\n              ELSE CAST({c} AS HUGEINT) END AS up{w}"
-        for w, c in enumerate(wcols)
+    return _adc_sql(
+        PQ16, ctes, fin, query_id, k, probed=True, cell_luts=True
     )
-    body = ",\n".join(ctes)
-    return f"""
-WITH {body},
-rlut AS (
-  SELECT qs.cell, c.s, c.j,
-         {_DOT_SQL.format(a='qs.vs', b='qs.vs')}
-           - 2 * {_DOT_SQL.format(a='qs.vs', b='c.cs')}
-           + {_DOT_SQL.format(a='c.cs', b='c.cs')} AS dist
-  FROM {fin} c JOIN qsubs qs ON qs.s = c.s
-),
-cands AS (
-  SELECT cf.vec_id, cf.cell
-  FROM cells_fin cf JOIN qcells USING (cell)
-  WHERE cf.vec_id != {query_id}
-),
-unwrapped AS (
-  SELECT codes.vec_id, codes.label, cands.cell,
-{unwraps}
-  FROM codes JOIN cands ON codes.vec_id = cands.vec_id
-),
-unpacked AS (
-  SELECT u.vec_id, u.label, u.cell, m.s,
-         CAST(((CASE m.w WHEN 0 THEN u.up0 ELSE u.up1 END) // m.mult)
-              % {PQ8_K} AS BIGINT) AS j
-  FROM unwrapped u CROSS JOIN mults m
-),
-adcs AS (
-  SELECT vec_id, ANY_VALUE(label) AS label, SUM(rlut.dist) AS adc
-  FROM unpacked JOIN rlut ON unpacked.cell = rlut.cell
-                         AND unpacked.s = rlut.s AND unpacked.j = rlut.j
-  GROUP BY vec_id
-)
-SELECT vec_id, label, {_ROUND6_SQL.format(x='adc')} AS adc
-FROM adcs
-ORDER BY adc ASC, vec_id ASC
-LIMIT {k}
-"""
 
 
 # ---------------------------------------------------------------------------

@@ -37,7 +37,12 @@ from ..operators import similarity as sim
 from ._base import _register
 
 
-@_register("ann_ivfpq16_rerank_topk", sim.ann_ivfpq16_rerank_topk_sql())
+@_register(
+    "ann_ivfpq16_rerank_topk",
+    sim.ann_ivfpq_topk_sql(
+        sim.PQ16, train_iters=1, shortlist=sim.RERANK_SHORTLIST
+    ),
+)
 def ann_ivfpq16_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The complete production retrieval stack (faiss IndexIVFPQ +
     refine, determinized): nprobe=2 Lloyd cells prune the corpus,
@@ -46,8 +51,11 @@ def ann_ivfpq16_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query cost at scale is (nprobe/|cells|) x 16 bytes/vector
     scanned plus 64 key-fetches. Shortlist cut on ROUND6(adc) keeps
     the candidate set engine-identical (measured recall in SCALE.md)."""
-    return sim.ann_ivfpq16_rerank_topk(
-        fx._read(spark, sf_dir, "embeddings")
+    return sim.ann_ivfpq_topk(
+        fx._read(spark, sf_dir, "embeddings"),
+        sim.PQ16,
+        train_iters=1,
+        shortlist=sim.RERANK_SHORTLIST,
     )
 
 
@@ -263,7 +271,9 @@ def nation_revenue_brown_forsythe(
     return brown_forsythe(vals, "v", "g")
 
 
-@_register("ann_ivfpq16_serve_topk", sim.ann_ivfpq16_topk_sql())
+@_register(
+    "ann_ivfpq16_serve_topk", sim.ann_ivfpq_topk_sql(sim.PQ16, train_iters=1)
+)
 def ann_ivfpq16_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SEARCH step of the explicit faiss-style index lifecycle
     (train -> add -> search): ivfpq16_index_for builds the serving
@@ -276,7 +286,12 @@ def ann_ivfpq16_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.ann_ivfpq16_serve_topk(idx)
 
 
-@_register("ann_ivfpq16_serve_rerank_topk", sim.ann_ivfpq16_rerank_topk_sql())
+@_register(
+    "ann_ivfpq16_serve_rerank_topk",
+    sim.ann_ivfpq_topk_sql(
+        sim.PQ16, train_iters=1, shortlist=sim.RERANK_SHORTLIST
+    ),
+)
 def ann_ivfpq16_serve_rerank_topk(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -286,7 +301,7 @@ def ann_ivfpq16_serve_rerank_topk(
     production query path of the retrieval stack, with the index build
     amortized across queries instead of retrained per call."""
     idx = sim.ivfpq16_index_for(fx._read(spark, sf_dir, "embeddings"))
-    return sim.ann_ivfpq16_serve_rerank_topk(idx)
+    return sim.ann_ivfpq16_serve_topk(idx, shortlist=sim.RERANK_SHORTLIST)
 
 
 @_register("semdedup_keep_k32", sim.semdedup_keep_sql(k=32))

@@ -7,8 +7,6 @@ against its own oracle SQL."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -34,30 +32,18 @@ def test_trained_memo_hits_and_is_keyed_by_corpus(spark):
     emb1 = fx._read(spark, SF0001, "embeddings")
     emb2 = fx._read(spark, SF0001, "embeddings")
     v1, v2 = sim._vectors(emb1), sim._vectors(emb2)
-    b1 = sim._pq8_family_books(v1, 1, sim.PQ16_M, sim.PQ16_DIMS)
-    b2 = sim._pq8_family_books(v2, 1, sim.PQ16_M, sim.PQ16_DIMS)
+    b1 = sim._pq_books(v1, sim.PQ16, 1)
+    b2 = sim._pq_books(v2, sim.PQ16, 1)
     assert b1 is b2, "same corpus+params must hit the memo"
     # different params -> different trained object
-    b0 = sim._pq8_family_books(v1, 0, sim.PQ16_M, sim.PQ16_DIMS)
+    b0 = sim._pq_books(v1, sim.PQ16, 0)
     assert b0 is not b1
     # a projection that changes the relation is a different corpus key
     # (slice keeps all 256 PQ seed vectors so training stays defined)
     half = v1.where(F.col("vec_id") < 400)
-    bh = sim._pq8_family_books(half, 1, sim.PQ16_M, sim.PQ16_DIMS)
+    bh = sim._pq_books(half, sim.PQ16, 1)
     assert bh is not b1
     assert bh != b1, "half-corpus training must differ from full"
-
-
-def test_trained_memo_kill_switch(spark, monkeypatch):
-    """SPARK_GRAFT_TRAIN_CACHE=0 bypasses the memo but returns equal
-    values (training is deterministic)."""
-    emb = fx._read(spark, SF0001, "embeddings")
-    vecs = sim._vectors(emb)
-    cached = sim._seed_centroids(vecs)
-    monkeypatch.setenv("SPARK_GRAFT_TRAIN_CACHE", "0")
-    fresh = sim._seed_centroids(vecs)
-    assert fresh is not cached
-    assert fresh == cached
 
 
 # ---------------------------------------------------------------------------
@@ -72,10 +58,15 @@ def test_index_serve_matches_one_shot_queries(spark):
     emb = fx._read(spark, SF0001, "embeddings")
     idx = sim.ivfpq16_index_for(emb)
     assert _rows(sim.ann_ivfpq16_serve_topk(idx)) == _rows(
-        sim.ann_ivfpq16_topk(emb)
+        sim.ann_ivfpq_topk(emb, sim.PQ16, train_iters=1)
     )
-    assert _rows(sim.ann_ivfpq16_serve_rerank_topk(idx)) == _rows(
-        sim.ann_ivfpq16_rerank_topk(emb)
+    shortlist = sim.RERANK_SHORTLIST
+    assert _rows(
+        sim.ann_ivfpq16_serve_topk(idx, shortlist=shortlist)
+    ) == _rows(
+        sim.ann_ivfpq_topk(
+            emb, sim.PQ16, train_iters=1, shortlist=shortlist
+        )
     )
 
 
@@ -98,7 +89,7 @@ def test_index_build_is_cached_and_serve_plan_is_pure(spark):
     assert "TakeOrderedAndProject" in plan
     assert "rangepartitioning" not in plan.lower()
     rplan = (
-        sim.ann_ivfpq16_serve_rerank_topk(idx1)
+        sim.ann_ivfpq16_serve_topk(idx1, shortlist=sim.RERANK_SHORTLIST)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -308,14 +299,28 @@ def test_ccnet_staged_mix_budget_scales_with_pool(spark):
         assert big[s][1] >= small[s][1]
 
 
-def test_pq_seed_band_incomplete_is_loud(spark):
-    """Training PQ codebooks on a corpus that lost part of the
-    256-vector seed band raises a named contract error up front instead
-    of a downstream KeyError mid-train (the r10 DEVNOTES known edge)."""
-    emb = fx._read(spark, SF0001, "embeddings")
-    sliced = sim._vectors(emb).where(F.col("vec_id") < 100)
+_SPECS = {
+    "PQ3": sim.PQ3, "PQ8": sim.PQ8, "PQ16": sim.PQ16, "OPQ16": sim.OPQ16,
+}
+
+
+@pytest.mark.parametrize(
+    "spec,cut",
+    [pytest.param(s, "vec_id != 5", id=f"{n}-gap") for n, s in _SPECS.items()]
+    + [
+        pytest.param(_SPECS[n], "vec_id < 100", id=f"{n}-tail")
+        for n in ("PQ8", "PQ16", "OPQ16")
+    ],
+)
+def test_pq_seed_band_incomplete_is_loud(spark, spec, cut):
+    """Quantizing a corpus that lost part of its seed band (vec_id
+    1..2^bits) raises a named contract error up front, for every spec.
+    The gap case (vec_id 5 gone) guards the 3-bit family: a 7-entry
+    book would shift every later position, so the Spark codes would
+    silently stop matching the oracle's vec_id - 1."""
+    emb = fx._read(spark, SF0001, "embeddings").where(cut)
     with pytest.raises(ValueError, match="PQ seed band incomplete"):
-        sim._pq8_books(sliced)
+        sim.embedding_pq_codes(emb, spec)
 
 
 def test_ivfpq16_index_stats_census_invariants(spark):
@@ -523,7 +528,7 @@ def test_residual_ivfpq_shares_scan_shape_with_plain(spark):
     ann_ivfpq16_topk (same serving cost); the rankings may differ (the
     point of residual encoding)."""
     emb = fx._read(spark, SF0001, "embeddings")
-    plain = sim.ann_ivfpq16_topk(emb)
+    plain = sim.ann_ivfpq_topk(emb, sim.PQ16, train_iters=1)
     resid = sim.ann_ivfpq16_residual_topk(emb)
     assert plain.columns == resid.columns
     assert resid.count() == sim.TOP_K
@@ -560,26 +565,21 @@ def _js_expr_rows(vecs, books, m, d, form):
 
 
 @pytest.mark.parametrize(
-    "m,d,form",
+    "spec",
     [
-        (sim.PQ16_M, sim.PQ16_DIMS, "2term"),
-        (sim.PQ_M, sim.PQ_DIMS, "2term"),
-        (sim.PQ_M, sim.PQ_DIMS, "3term"),
+        pytest.param(s, id=f"{s.m}-{s.d}-{s.form}")
+        for s in (sim.PQ16, sim.PQ8, sim.PQ3)
     ],
 )
-def test_np_code_assignment_equals_expression_form(spark, m, d, form):
+def test_np_code_assignment_equals_expression_form(spark, spec):
     emb = fx._read(spark, SF0001, "embeddings")
     vecs = sim._vectors(emb)
-    if form == "3term":
-        books = sim._pq_codebooks(vecs)
-    else:
-        books = sim._pq8_books(vecs, m=m, d=d)
-    ref = _js_expr_rows(vecs, books, m, d, form)
+    books = sim._pq_seed_books(vecs, spec)
+    ref = _js_expr_rows(vecs, books, spec.m, spec.d, spec.form)
+    kernel = sim._js_np_udf(books, spec.m, spec.d, spec.form)
     got = {
         r["vec_id"]: list(r["js"])
-        for r in vecs.select(
-            "vec_id", sim._js_np_udf(books, m, d, form).alias("js")
-        ).collect()
+        for r in vecs.select("vec_id", kernel.alias("js")).collect()
     }
     assert got == ref
 
@@ -611,12 +611,12 @@ def test_np_pack_words_match_expression_shift_sum(spark):
     high PQ16 shifts) equal the expression packers' output."""
     emb = fx._read(spark, SF0001, "embeddings")
     vecs = sim._vectors(emb)
-    books = sim._pq8_books(vecs, m=sim.PQ16_M, d=sim.PQ16_DIMS)
+    books = sim._pq_seed_books(vecs, sim.PQ16)
     got = {
         r["vec_id"]: (r["pq_lo"], r["pq_hi"])
-        for r in sim._pq16_pack(vecs, books).collect()
+        for r in sim._pq_pack(vecs, sim.PQ16, books).collect()
     }
-    js = _js_expr_rows(vecs, books, sim.PQ16_M, sim.PQ16_DIMS, "2term")
+    js = _js_expr_rows(vecs, books, sim.PQ16.m, sim.PQ16.d, "2term")
 
     def wrap(x):
         x &= (1 << 64) - 1

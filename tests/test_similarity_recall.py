@@ -170,19 +170,20 @@ def test_pq8_seed_vectors_quantize_to_themselves(spark, sf_dir):
 
     emb = fx._read(spark, sf_dir, "embeddings")
     vecs = sim._vectors(emb)
-    books = sim._pq8_books(vecs)
+    spec = sim.PQ8
+    books = sim._pq_books(vecs, spec, 0)
     codes = {
         r["vec_id"]: r["pq_code"]
-        for r in sim.embedding_pq8_codes(emb)
-        .where(F.col("vec_id").between(sim.PQ8_SEED_LO, sim.PQ8_SEED_HI))
+        for r in sim.embedding_pq_codes(emb, spec)
+        .where(F.col("vec_id").between(1, spec.k))
         .collect()
     }
-    assert len(codes) == sim.PQ8_K
+    assert len(codes) == spec.k
     assert any(c < 0 for c in codes.values())  # bit 63 exercised
     for cid, code in codes.items():
-        own_j = cid - sim.PQ8_SEED_LO
-        for s in range(sim.PQ_M):
-            j = (code >> (sim.PQ8_BITS * s)) & (sim.PQ8_K - 1)
+        own_j = cid - 1
+        for s in range(spec.m):
+            j = (code >> (spec.bits * s)) & (spec.k - 1)
             assert books[s][j] == books[s][own_j], (cid, s, j)
 
 
@@ -198,8 +199,8 @@ def test_pq8_trained_books_reduce_quantization_error(spark, sf_dir):
     def total_err(books):
         tot = 0.0
         for v in rows:
-            for s in range(sim.PQ_M):
-                vs = v[s * sim.PQ_DIMS : (s + 1) * sim.PQ_DIMS]
+            for s in range(sim.PQ8.m):
+                vs = v[s * sim.PQ8.d : (s + 1) * sim.PQ8.d]
                 tot += min(
                     sim._seq_dot(vs, vs)
                     - 2 * sim._seq_dot(vs, cs)
@@ -208,8 +209,8 @@ def test_pq8_trained_books_reduce_quantization_error(spark, sf_dir):
                 )
         return tot
 
-    seed = total_err(sim._pq8_books(vecs))
-    trained = total_err(sim._pq8_lloyd_books(vecs, 1))
+    seed = total_err(sim._pq_books(vecs, sim.PQ8, 0))
+    trained = total_err(sim._pq_books(vecs, sim.PQ8, 1))
     assert trained <= seed + 1e-9, (trained, seed)
 
 
@@ -225,7 +226,8 @@ def test_opq_permutation_is_balanced_bijection(spark, sf_dir):
     emb = fx._read(spark, sf_dir, "embeddings")
     vecs = sim._vectors(emb)
     perm = sim._opq_perm(vecs)
-    n = sim.PQ16_M * sim.PQ16_DIMS
+    m, d = sim.OPQ16.m, sim.OPQ16.d
+    n = m * d
     assert sorted(perm) == list(range(n))
 
     rows = [[float(x) for x in r["v"]] for r in vecs.select("v").collect()]
@@ -233,9 +235,8 @@ def test_opq_permutation_is_balanced_bijection(spark, sf_dir):
 
     def spread(layout):
         per_sub = [
-            sum(energy[layout[s * sim.PQ16_DIMS + i]]
-                for i in range(sim.PQ16_DIMS))
-            for s in range(sim.PQ16_M)
+            sum(energy[layout[s * d + i]] for i in range(d))
+            for s in range(m)
         ]
         return max(per_sub) - min(per_sub)
 

@@ -195,38 +195,39 @@ def main(argv: list[str]) -> int:
         order = np.lexsort((ids, d2))
         top = [int(ids[i]) for i in order if ids[i] != q][: args.k]
         l2_truth[q] = set(top)
+    # name -> (spec, operator, extra kwargs): the registered PQ family
+    adc, ivf = sim.ann_pq_adc_topk, sim.ann_ivfpq_topk
+    trained = {"train_iters": 1}
+    rerank = {"train_iters": 1, "shortlist": sim.RERANK_SHORTLIST}
     pq_variants = {
-        "ann_pq_adc_topk": sim.ann_pq_adc_topk,
-        "ann_pq_adc_topk_lloyd": lambda e, query_id, k: sim.ann_pq_adc_topk(
-            e, query_id=query_id, k=k, train_iters=1
+        "ann_pq_adc_topk": (sim.PQ3, adc, {}),
+        "ann_pq_adc_topk_lloyd": (sim.PQ3, adc, trained),
+        "ann_ivfpq_topk": (sim.PQ3, ivf, {}),
+        "ann_pq8_adc_topk": (sim.PQ8, adc, {}),
+        "ann_pq8_adc_topk_lloyd": (sim.PQ8, adc, trained),
+        "ann_pq16_adc_topk": (sim.PQ16, adc, {}),
+        "ann_pq16_adc_topk_lloyd": (sim.PQ16, adc, trained),
+        "ann_opq16_adc_topk_untrained": (sim.OPQ16, adc, {}),
+        "ann_opq16_adc_topk": (sim.OPQ16, adc, trained),
+        "ann_ivfpq16_topk": (sim.PQ16, ivf, trained),
+        "ann_ivfpq16_residual_topk": (
+            sim.PQ16,
+            lambda e, _spec, **kw: sim.ann_ivfpq16_residual_topk(e, **kw),
+            {},
         ),
-        "ann_ivfpq_topk": sim.ann_ivfpq_topk,
-        "ann_pq8_adc_topk": sim.ann_pq8_adc_topk,
-        "ann_pq8_adc_topk_lloyd": lambda e, query_id, k: sim.ann_pq8_adc_topk(
-            e, query_id=query_id, k=k, train_iters=1
-        ),
-        "ann_pq16_adc_topk": sim.ann_pq16_adc_topk,
-        "ann_pq16_adc_topk_lloyd": lambda e, query_id, k: (
-            sim.ann_pq16_adc_topk(e, query_id=query_id, k=k, train_iters=1)
-        ),
-        "ann_opq16_adc_topk_untrained": lambda e, query_id, k: (
-            sim.ann_opq16_adc_topk(e, query_id=query_id, k=k, train_iters=0)
-        ),
-        "ann_opq16_adc_topk": sim.ann_opq16_adc_topk,
-        "ann_ivfpq16_topk": sim.ann_ivfpq16_topk,
-        "ann_ivfpq16_residual_topk": sim.ann_ivfpq16_residual_topk,
-        "ann_pq16_rerank_topk": sim.ann_pq16_rerank_topk,
-        "ann_ivfpq16_rerank_topk": sim.ann_ivfpq16_rerank_topk,
+        "ann_pq16_rerank_topk": (sim.PQ16, adc, rerank),
+        "ann_ivfpq16_rerank_topk": (sim.PQ16, ivf, rerank),
     }
-    for name, fn in pq_variants.items():
+    for name, (spec, fn, kw) in pq_variants.items():
         hits = 0
         for q in qids:
             got = {
-                r["vec_id"] for r in fn(emb, query_id=q, k=args.k).collect()
+                r["vec_id"]
+                for r in fn(emb, spec, query_id=q, k=args.k, **kw).collect()
             }
             hits += len(got & l2_truth[q])
         recall = hits / (len(qids) * args.k)
-        nbytes = 16 if ("pq16" in name or "opq16" in name) else 8
+        nbytes = 8 * len(spec.word_cols)
         print(f"| {name} | {recall:.3f} | {nbytes} (vs 512 raw) |")
     return 0
 
